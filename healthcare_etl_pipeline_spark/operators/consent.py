@@ -26,28 +26,25 @@ class ConsentSplit(NamedTuple):
     blocked: DataFrame  # id column(s) + `reason` string column
 
 
+def consent_passes(consent_col: str | Column) -> Column:
+    """Column<boolean>, never null: ``consent_col <=> true``.
+
+    Null-safe equality reproduces the reference's ``is True``: null,
+    missing and false all block.
+    """
+    c = F.col(consent_col) if isinstance(consent_col, str) else consent_col
+    return c.eqNullSafe(F.lit(True))
+
+
 def consent_gate(
     df: DataFrame,
     consent_col: str | Column = "consent.data_sharing",
     id_cols: tuple[str, ...] = ("mrn",),
     reason: str = DEFAULT_REASON,
 ) -> ConsentSplit:
-    """Split on a strict boolean-True consent predicate.
-
-    ``<=>`` (null-safe equal) reproduces the reference's ``is True``: null,
-    missing and false all block.
-    """
-    c = F.col(consent_col) if isinstance(consent_col, str) else consent_col
-    passed = c.eqNullSafe(F.lit(True))
+    """Split on the strict boolean-True predicate ``consent_passes``; any
+    boolean ``Column`` works as the predicate (null counts as blocked)."""
+    passed = consent_passes(consent_col)
     consented = df.filter(passed)
     blocked = df.filter(~passed).select(*id_cols, F.lit(reason).alias("reason"))
     return ConsentSplit(consented, blocked)
-
-
-def gate(df: DataFrame, predicate: Column, id_cols: tuple[str, ...], reason: str) -> ConsentSplit:
-    """Generic reasoned gate for arbitrary predicates (null counts as blocked)."""
-    passed = predicate.eqNullSafe(F.lit(True))
-    return ConsentSplit(
-        df.filter(passed),
-        df.filter(~passed).select(*id_cols, F.lit(reason).alias("reason")),
-    )

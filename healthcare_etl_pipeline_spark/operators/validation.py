@@ -162,6 +162,11 @@ def compile_rules(rules: list[Rule]) -> Column:
     )
 
 
+def is_valid(rules: list[Rule]) -> Column:
+    """Column<boolean>, never null: the record violates none of ``rules``."""
+    return F.size(compile_rules(rules)) == 0
+
+
 class ValidationSplit(NamedTuple):
     valid: DataFrame
     invalid: DataFrame  # carries an `errors` array<string> column
@@ -172,13 +177,13 @@ def validate_split(
 ) -> ValidationSplit:
     """Non-fatal validation split (reference pipeline.py:41-61).
 
-    Both sides derive from one withColumn so the scan/validation expression
-    is shared; Spark evaluates it once per branch materialization (or once
-    total if the caller persists the annotated frame).
+    Both sides filter on ``is_valid``; only the invalid side carries the
+    error messages. Spark evaluates the rules once per branch
+    materialization (or once total if the caller persists the input).
     """
-    annotated = df.withColumn(errors_col, compile_rules(rules))
-    valid = annotated.filter(F.size(errors_col) == 0).drop(errors_col)
-    invalid = annotated.filter(F.size(errors_col) > 0)
+    passed = is_valid(rules)
+    valid = df.filter(passed)
+    invalid = df.filter(~passed).withColumn(errors_col, compile_rules(rules))
     return ValidationSplit(valid, invalid)
 
 

@@ -5,10 +5,16 @@ Re-expresses reference app/etl/pipeline.py:135-143 (factory wiring the fixed
 5-stage chain) and the /ingest handler's persistence+run-metadata block
 (app/api/routes.py:74-164), Spark-first:
 
-- Stages declare lazy DataFrame transformations; per-stage counts come from
-  one action per routed branch (batch ingest is bounded — reference caps at
-  1000 records/batch — so stage counts are cheap; the heavy lifting is the
-  single cached materialization in the load stage).
+- Stages declare lazy DataFrame transformations. Every routing count
+  (extract, valid/invalid, consented/blocked; transform = consented) comes
+  from ONE aggregate over the extracted batch, run by the extract stage;
+  the validate, check_consent and transform stages only declare their
+  splits and report their share of that row. The load stage does the one
+  real materialization (a local checkpoint before the multi-sink fan-out).
+- Not ``observe()``: with AQE on (Spark 4.1), empty-relation propagation
+  drops the ``CollectMetrics`` node when a branch below it is empty, so an
+  all-invalid or all-blocked batch loses its metrics (``toPyRow``
+  assertion). An aggregate over the unsplit batch has no such branch.
 - The run summary and ``pipeline_runs`` row reproduce the reference's
   observable output: per-task status/duration, record_counts harvested from
   ``*_count`` keys (routes.py:151-155), input/output counts, DAG snapshot.
@@ -20,15 +26,19 @@ import json
 import threading
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from healthcare_etl_pipeline_spark.operators.consent import consent_gate
+from healthcare_etl_pipeline_spark.operators.consent import (
+    consent_gate,
+    consent_passes,
+)
 from healthcare_etl_pipeline_spark.operators.ingest import load_patients
 from healthcare_etl_pipeline_spark.operators.transform import transform_patients
 from healthcare_etl_pipeline_spark.operators.validation import (
     PATIENT_RULES,
+    is_valid,
     validate_split,
 )
 from healthcare_etl_pipeline_spark.plans.dag import DAG
@@ -65,6 +75,26 @@ def records_to_df(spark: SparkSession, records: list[dict]) -> DataFrame:
     return spark.createDataFrame(normalized, RAW_PATIENT_SCHEMA)
 
 
+def routing_counts(df: DataFrame, consent_col: Column) -> dict[str, int]:
+    """The five routing counts of one batch, from ONE aggregate.
+
+    Uses the same validity and consent predicates as ``validate_split`` and
+    ``consent_gate``, so the counts match what the splits route.
+    """
+    flags = df.select(
+        is_valid(PATIENT_RULES).alias("v"), consent_passes(consent_col).alias("c")
+    )
+    v, c = F.col("v"), F.col("c")
+    row = flags.agg(
+        F.count(F.lit(1)).alias("extract_count"),
+        F.count_if(v).alias("valid_count"),
+        F.count_if(~v).alias("invalid_count"),
+        F.count_if(v & c).alias("consented_count"),
+        F.count_if(v & ~c).alias("blocked_count"),
+    ).first()
+    return row.asDict()
+
+
 def build_patient_ingestion_pipeline(
     warehouse: Warehouse | None = None,
     *,
@@ -78,38 +108,46 @@ def build_patient_ingestion_pipeline(
     consented/blocked → transformed → load_count.
     """
     dag = DAG("patient_ingestion")
+    data_sharing = F.col("consent")["data_sharing"]
 
     def extract(ctx: dict[str, Any]) -> dict[str, Any]:
         df: DataFrame = ctx["raw_df"]
-        return {"extracted_df": df, "extract_count": df.count()}
+        counts = routing_counts(df, data_sharing)
+        return {
+            "extracted_df": df,
+            "routing": counts,
+            "extract_count": counts["extract_count"],
+        }
 
     def validate(ctx: dict[str, Any]) -> dict[str, Any]:
         valid, invalid = validate_split(ctx["extracted_df"], PATIENT_RULES)
+        counts = ctx["routing"]
         return {
             "valid_df": valid,
             "invalid_df": invalid,
-            "valid_count": valid.count(),
-            "invalid_count": invalid.count(),
+            "valid_count": counts["valid_count"],
+            "invalid_count": counts["invalid_count"],
         }
 
     def check_consent(ctx: dict[str, Any]) -> dict[str, Any]:
-        consented, blocked = consent_gate(
-            ctx["valid_df"], consent_col=F.col("consent")["data_sharing"]
-        )
+        consented, blocked = consent_gate(ctx["valid_df"], consent_col=data_sharing)
+        counts = ctx["routing"]
         return {
             "consented_df": consented,
             "blocked_df": blocked,
-            "consented_count": consented.count(),
-            "blocked_count": blocked.count(),
+            "consented_count": counts["consented_count"],
+            "blocked_count": counts["blocked_count"],
         }
 
     def transform(ctx: dict[str, Any]) -> dict[str, Any]:
-        transformed = transform_patients(ctx["consented_df"])
-        return {"transformed_df": transformed, "transform_count": transformed.count()}
+        return {
+            "transformed_df": transform_patients(ctx["consented_df"]),
+            "transform_count": ctx["consented_count"],
+        }
 
     def load(ctx: dict[str, Any]) -> dict[str, Any]:
-        if warehouse is None:  # dry-run mode for tests without a warehouse dir
-            return {"load_count": ctx["transformed_df"].count()}
+        if warehouse is None:  # dry run: no table, so no mrn conflict to route
+            return {"load_count": ctx["transform_count"]}
         return load_patients(
             warehouse, ctx["transformed_df"], actor=actor, strict=strict, txn=txn
         )
@@ -300,69 +338,3 @@ def _mrn_conflict_since(
     return bool(
         staged_mrns.join(concurrent_mrns, "mrn", "left_semi").take(1)
     )
-
-
-def ingest_batch_observed(
-    spark: SparkSession,
-    records: list[dict],
-    warehouse: Warehouse,
-    *,
-    actor: str = "api",
-    strict: bool = False,
-) -> dict[str, Any]:
-    """Single-pass ingest: identical results to ``ingest_batch``, but every
-    stage count comes from ONE ``observe()`` on the load materialization
-    instead of one action per stage (SURVEY P9/A1 — metrics without extra
-    passes).
-
-    ``ingest_batch`` runs ~8 Spark actions per batch (a count per routed
-    branch); fine at the reference's ≤1000-row batches, wasteful when the
-    same pipeline ingests a 100 TB backfill. Here the full batch is scanned
-    once: validation + consent flags are annotated, observed aggregates
-    harvest all five stage counts during the load checkpoint, and only the
-    pass-through rows run the encrypt UDF.
-
-    Trade-off (documented): per-stage wall-clock durations collapse into the
-    single load action, so the run record carries counts but not per-stage
-    timings — the price of not re-executing the plan per stage.
-    """
-    from pyspark.sql import Observation
-
-    from healthcare_etl_pipeline_spark.operators.ingest import load_patients
-
-    raw = records_to_df(spark, records)
-    from healthcare_etl_pipeline_spark.operators.validation import (
-        PATIENT_RULES,
-        compile_rules,
-    )
-
-    is_valid = F.size(compile_rules(PATIENT_RULES)) == 0
-    is_consented = F.col("consent")["data_sharing"].eqNullSafe(F.lit(True))
-    annotated = raw.withColumns(
-        {"__valid": is_valid, "__consented": is_consented}
-    )
-
-    obs = Observation("ingest")
-    observed = annotated.observe(
-        obs,
-        F.count(F.lit(1)).alias("extract_count"),
-        F.count_if(F.col("__valid")).alias("valid_count"),
-        F.count_if(~F.col("__valid")).alias("invalid_count"),
-        F.count_if(F.col("__valid") & F.col("__consented")).alias("consented_count"),
-        F.count_if(F.col("__valid") & ~F.col("__consented")).alias("blocked_count"),
-    )
-    passing = (
-        observed.filter(F.col("__valid") & F.col("__consented"))
-        .drop("__valid", "__consented")
-    )
-    transformed = transform_patients(passing)
-    load_result = load_patients(warehouse, transformed, actor=actor, strict=strict)
-    counts = {k: int(v) for k, v in obs.get.items()}
-    counts["transform_count"] = counts["consented_count"]
-    counts.update(load_result)
-    summary = {
-        "pipeline": "patient_ingestion_observed",
-        "status": "success",
-        "record_counts": counts,
-    }
-    return summary

@@ -445,11 +445,9 @@ def bool_fold_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("consent", "json", "etl"),
 )
 def consent_gate_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from healthcare_etl_pipeline_spark.operators.consent import gate
-
     events = t(spark, sf_dir, "events")
     pred = F.get_json_object("props", "$.k").cast("long") >= 50
-    _, blocked = gate(events, pred, ("event_id",), "k below threshold")
+    _, blocked = consent_gate(events, pred, ("event_id",), "k below threshold")
     return blocked
 
 

@@ -79,8 +79,8 @@ def get_spark(
         # balloon to 100 MB batches: 50k-row text batches regressed the
         # corpus pipeline ~15% under the stock 64 MB bound; at 32 MB text
         # batches land at ~16k rows (back to baseline) while the narrow
-        # crypto rows still fill the full 50k (measured A/B in
-        # OPTIMIZATION_r10.md).
+        # crypto rows still fill the full 50k (A/B in the message of
+        # commit 2cf33d2).
         .config(
             "spark.sql.execution.arrow.maxBytesPerBatch",
             os.environ.get("SPARK_GRAFT_ARROW_BATCH_BYTES", str(32 * 1024 * 1024)),

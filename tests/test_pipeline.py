@@ -7,7 +7,12 @@ import pytest
 from healthcare_etl_pipeline_spark.functions.encryption import make_decrypt_udf
 from healthcare_etl_pipeline_spark.plans.pipeline import (
     ingest_batch,
+    ingest_batch_atomic,
     records_to_df,
+)
+from healthcare_etl_pipeline_spark.sources.warehouse import (
+    TransactionalWarehouse,
+    Warehouse,
 )
 from tests.conftest import make_patient
 
@@ -193,30 +198,98 @@ def test_intra_batch_duplicate_mrn_strict_raises(spark, warehouse):
     assert "DuplicateMrnError" in summary["tasks"]["load"]["error"]
 
 
-def test_observed_ingest_matches_classic(spark, warehouse, tmp_path):
-    """Single-pass observe() ingest produces the same counts and table
-    contents as the per-stage-action classic path."""
-    from healthcare_etl_pipeline_spark.plans.pipeline import ingest_batch_observed
-    from healthcare_etl_pipeline_spark.sources.warehouse import Warehouse
+def _txn_warehouse(spark, tmp_path):
+    wh = TransactionalWarehouse(spark, str(tmp_path / "txn_warehouse"))
+    wh.create_all()
+    return wh
 
+
+def _ingest_plain(spark, records, tmp_path):
+    wh = Warehouse(spark, str(tmp_path / "warehouse"))
+    wh.create_all()
+    return ingest_batch(spark, records, wh)
+
+
+def _ingest_atomic(spark, records, tmp_path):
+    summary = ingest_batch_atomic(spark, records, _txn_warehouse(spark, tmp_path))
+    assert summary["txn"]["committed"] == (summary["status"] == "success")
+    return summary
+
+
+INGEST_PATHS = pytest.mark.parametrize(
+    "ingest", [_ingest_plain, _ingest_atomic], ids=["plain", "atomic"]
+)
+
+
+def _counts(extract, valid, consented, load):
+    return {
+        "extract_count": extract,
+        "valid_count": valid,
+        "invalid_count": extract - valid,
+        "consented_count": consented,
+        "blocked_count": valid - consented,
+        "transform_count": consented,
+        "load_count": load,
+    }
+
+
+@INGEST_PATHS
+@pytest.mark.parametrize(
+    "records, expected",
+    [
+        # no record passes validation: every branch below validate is empty
+        ([make_patient(mrn=None)], _counts(1, 0, 0, 0)),
+        # every valid record is blocked: consented branch is empty
+        ([make_patient(consent={"data_sharing": False})], _counts(1, 1, 0, 0)),
+    ],
+    ids=["all_invalid", "all_blocked"],
+)
+def test_routing_counts_exact(spark, tmp_path, ingest, records, expected):
+    summary = ingest(spark, records, tmp_path)
+    assert summary["status"] == "success"
+    assert summary["record_counts"] == expected
+
+
+def test_routing_counts_strict_duplicate_fails_load(spark, tmp_path):
+    twh = _txn_warehouse(spark, tmp_path)
+    ingest_batch_atomic(spark, [make_patient()], twh)
+    summary = ingest_batch_atomic(spark, [make_patient()], twh, strict=True)
+    assert summary["status"] == "failed"
+    assert summary["txn"]["committed"] is False
+    assert "DuplicateMrnError" in summary["tasks"]["load"]["error"]
+    # the routing stages succeeded; only the failed load has no count
+    expected = _counts(1, 1, 1, load=0)
+    del expected["load_count"]
+    assert summary["record_counts"] == expected
+    assert twh.read("patients").count() == 1
+
+
+def test_ingest_spark_jobs_bounded(spark, tmp_path):
+    """Guard on the Spark jobs one atomic ingest launches.
+
+    Measured on this mixed batch into a non-empty table: 13 jobs, against
+    23 when each of the six routed branches ran its own count action. The
+    bound is the measured 13 plus 2 of headroom for AQE re-planning; the
+    per-branch counts (10 jobs) cannot come back under it.
+    """
+    twh = _txn_warehouse(spark, tmp_path)
     batch = [
         make_patient(),
         make_patient(mrn="MRN-002", name="John Roe", consent={"data_sharing": False}),
-        make_patient(mrn="MRN-003", name=None),  # invalid
+        make_patient(mrn="MRN-003", name=None),
         make_patient(mrn="MRN-004", name="Ana Diaz"),
     ]
-    classic = ingest_batch(spark, batch, warehouse)
-
-    wh2 = Warehouse(spark, str(tmp_path / "wh2"))
-    wh2.create_all()
-    observed = ingest_batch_observed(spark, batch, wh2)
-
-    keys = ["extract_count", "valid_count", "invalid_count",
-            "consented_count", "blocked_count", "load_count"]
-    assert {k: observed["record_counts"][k] for k in keys} == {
-        k: classic["record_counts"][k] for k in keys
-    }
-    assert wh2.read("patients").count() == warehouse.read("patients").count() == 2
-    assert wh2.read("consent_records").count() == warehouse.read(
-        "consent_records"
-    ).count()
+    ingest_batch_atomic(spark, batch, twh)
+    batch = [dict(r, mrn=f"{r['mrn']}-B") for r in batch]
+    sc = spark.sparkContext
+    group = f"ingest-job-guard-{tmp_path.name}"
+    sc.setJobGroup(group, "ingest job-count guard")
+    try:
+        summary = ingest_batch_atomic(spark, batch, twh)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert summary["status"] == "success"
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 15, n_jobs
