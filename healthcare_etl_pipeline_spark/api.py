@@ -14,7 +14,10 @@ Endpoints (prefix /api/v1, JSON in/out):
                                 (atomic multi-table commit, routes.py:148 parity)
 - ``GET  /patients/{id}``     → PatientResponse shape; 404 unknown id,
                                 403 when data_sharing consent is absent;
-                                the read appends an audit row (routes.py:190)
+                                the read appends an audit row (routes.py:190).
+                                One job reads the patient row and its granted
+                                consent rows (a union, no join); a 200 adds
+                                one job, the audit write.
 - ``GET  /patients``          → consent-gated listing; keyset pagination via
                                 ``?after_mrn=`` (``?offset=`` kept for parity)
 - ``GET  /queries``           → registered query names + tags
@@ -24,14 +27,20 @@ Serving posture: the handler thread submits Spark jobs against one shared
 session (Spark schedules concurrent jobs fairly); the server is a thin
 control plane — every data operation is the same operator the batch
 pipeline uses, so API semantics and pipeline semantics cannot drift apart.
+Every frame a request builds from Python rows (the ingest batch, the
+``pipeline_runs`` row, the audit rows) goes through
+``session.local_frame``: a JVM ``LocalRelation``, so the request's jobs
+start no Python worker except for the encrypting pandas UDF.
 Run via ``python -m healthcare_etl_pipeline_spark serve``.
 """
 
 from __future__ import annotations
 
+import datetime
 import json
 import re
 import threading
+import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
@@ -104,34 +113,35 @@ class EngineAPI:
         }
 
     def get_patient(self, patient_id: str) -> tuple[int, dict]:
-        from healthcare_etl_pipeline_spark.operators.reads import (
-            audited_read,
-            point_lookup,
+        """One job reads the patient row and its granted ``data_sharing``
+        consent rows together (a union of two filtered scans, no join);
+        404/403 are decided from that result, and a served 200 appends
+        one audit row built from the id already in hand."""
+        patient = self.warehouse.read("patients").filter(F.col("id") == patient_id)
+        granted = self.warehouse.read("consent_records").filter(
+            (F.col("patient_id") == patient_id)
+            & (F.col("consent_type") == "data_sharing")
+            & F.col("granted")
         )
-
-        patients = self.warehouse.read("patients")
-        row = point_lookup(patients, "id", patient_id).first()
-        if row is None:
+        rows = (
+            patient.select(
+                F.lit(True).alias("is_patient"), "mrn", "gender", "created_at"
+            )
+            .unionByName(
+                granted.select(F.lit(False).alias("is_patient")),
+                allowMissingColumns=True,
+            )
+            .collect()
+        )
+        found = [r for r in rows if r.is_patient]
+        if not found:
             return 404, {"detail": "Patient not found"}
-        consents = self.warehouse.read("consent_records")
-        granted = (
-            consents.filter(
-                (F.col("patient_id") == patient_id)
-                & (F.col("consent_type") == "data_sharing")
-                & F.col("granted")
-            ).first()
-            is not None
-        )
-        if not granted:
+        if len(found) == len(rows):
             return 403, {"detail": "Patient has not granted data sharing consent"}
-        audited_read(
-            self.warehouse,
-            point_lookup(patients, "id", patient_id),
-            actor="api_user",
-            resource_type="Patient",
-        )
+        row = found[0]
+        self._append_audit("read", patient_id, None)
         return 200, {
-            "id": row.id,
+            "id": patient_id,
             "mrn": row.mrn,
             "gender": row.gender,
             "created_at": str(row.created_at),
@@ -165,8 +175,17 @@ class EngineAPI:
         )
         rows = page.collect()
         if self.audit_list_reads:
-            self._append_list_audit(
-                n_rows=len(rows), limit=limit, offset=offset, after=after
+            self._append_audit(
+                "list",
+                None,
+                json.dumps(
+                    {
+                        "rows": len(rows),
+                        "limit": limit,
+                        "offset": offset,
+                        "after": list(after) if after else None,
+                    }
+                ),
             )
         return 200, [
             {
@@ -179,43 +198,29 @@ class EngineAPI:
             for r in rows
         ]
 
-    def _append_list_audit(self, *, n_rows, limit, offset, after) -> None:
-        """One audit row per served listing page (flag-gated deviation
-        from the reference, which does not audit list reads)."""
-        import datetime
-        import uuid
-
-        from pyspark.sql import Row
-
+    def _append_audit(
+        self, action: str, resource_id: str | None, detail: str | None
+    ) -> None:
+        """One ``audit_log`` row for a served read (reference audit.py:16-35)
+        — a point read, or a listing page when ``audit_list_reads`` is set."""
+        from healthcare_etl_pipeline_spark.session import local_frame
         from healthcare_etl_pipeline_spark.sources.warehouse import (
             AUDIT_LOG_SCHEMA,
         )
 
-        now = datetime.datetime.now()
+        now = datetime.datetime.now(datetime.timezone.utc)
+        row = {
+            "id": str(uuid.uuid4()),
+            "actor": "api_user",
+            "action": action,
+            "resource_type": "Patient",
+            "resource_id": resource_id,
+            "detail": detail,
+            "timestamp": now,
+            "dt": now.date(),
+        }
         self.warehouse.append(
-            self.spark.createDataFrame(
-                [
-                    Row(
-                        id=str(uuid.uuid4()),
-                        actor="api_user",
-                        action="list",
-                        resource_type="Patient",
-                        resource_id=None,
-                        detail=json.dumps(
-                            {
-                                "rows": n_rows,
-                                "limit": limit,
-                                "offset": offset,
-                                "after": list(after) if after else None,
-                            }
-                        ),
-                        timestamp=now,
-                        dt=now.date(),
-                    )
-                ],
-                AUDIT_LOG_SCHEMA,
-            ),
-            "audit_log",
+            local_frame(self.spark, [row], AUDIT_LOG_SCHEMA), "audit_log"
         )
 
     def list_queries(self) -> tuple[int, list]:

@@ -154,41 +154,6 @@ def consented_listing(
     return keyset_page_multi(projected, [order_key, "id"], after=after, limit=limit)
 
 
-def audited_read(
-    warehouse,
-    df: DataFrame,
-    *,
-    actor: str,
-    resource_type: str,
-    id_col: str = "id",
-    action: str = "read",
-) -> DataFrame:
-    """Read that writes: append one audit row per returned record, then
-    return the (materialized) result.
-
-    The reference audits point reads inside the request handler (reference
-    routes.py:190-197 — the one query with a side effect). Per SURVEY §7.6
-    this is an EXPLICIT wrapper, never implicit query instrumentation: the
-    caller opts in, and the result is localCheckpoint-ed first so the rows
-    audited are exactly the rows returned (the audit append must not
-    re-execute a non-deterministic or now-stale plan).
-    """
-    from healthcare_etl_pipeline_spark.operators.ingest import build_audit_rows
-
-    materialized = df.localCheckpoint(eager=True)
-    warehouse.append(
-        build_audit_rows(
-            materialized,
-            actor=actor,
-            action=action,
-            resource_type=resource_type,
-            id_col=id_col,
-        ),
-        "audit_log",
-    )
-    return materialized
-
-
 def nested_patient_shape(patients: DataFrame, consents: DataFrame) -> DataFrame:
     """Patient-with-consents nested shape (reference selectin prefetch, J3).
 

@@ -42,6 +42,7 @@ from healthcare_etl_pipeline_spark.operators.validation import (
     validate_split,
 )
 from healthcare_etl_pipeline_spark.plans.dag import DAG
+from healthcare_etl_pipeline_spark.session import local_frame
 from healthcare_etl_pipeline_spark.sources.warehouse import Warehouse
 
 RAW_PATIENT_SCHEMA = T.StructType(
@@ -64,7 +65,17 @@ _OCC_COMMIT_LOCK = threading.Lock()
 
 
 def records_to_df(spark: SparkSession, records: list[dict]) -> DataFrame:
-    """Batch source S1/S2: typed DataFrame from raw record dicts."""
+    """Batch source S1/S2: typed DataFrame from raw record dicts.
+
+    Built through Arrow (``session.local_frame``), so the batch plans as a
+    JVM ``LocalRelation`` and the routing aggregate, the splits and the
+    load's checkpoint start no Python worker per job; only the encrypting
+    pandas UDF does. Values are coerced exactly as ``createDataFrame(list)``
+    coerces them: a bool in a string field becomes ``"true"``/``"false"``,
+    any other non-str value ``str(v)`` (``123`` → ``"123"``); a consent
+    that is not a dict, or a consent value that is not a bool or None,
+    raises.
+    """
     if not 1 <= len(records) <= MAX_BATCH_SIZE:
         raise ValueError(
             f"batch size must be between 1 and {MAX_BATCH_SIZE}, got {len(records)}"
@@ -72,7 +83,7 @@ def records_to_df(spark: SparkSession, records: list[dict]) -> DataFrame:
     normalized = [
         {f.name: r.get(f.name) for f in RAW_PATIENT_SCHEMA.fields} for r in records
     ]
-    return spark.createDataFrame(normalized, RAW_PATIENT_SCHEMA)
+    return local_frame(spark, normalized, RAW_PATIENT_SCHEMA)
 
 
 def routing_counts(df: DataFrame, consent_col: Column) -> dict[str, int]:
@@ -189,7 +200,8 @@ def write_run_record(
             T.StructField("dag_definition", T.StringType()),
         ]
     )
-    row = warehouse.spark.createDataFrame(
+    row = local_frame(
+        warehouse.spark,
         [
             {
                 "pipeline_name": dag.name,

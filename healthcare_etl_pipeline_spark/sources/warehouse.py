@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
 from .commit_backend import (
     EXISTS,
     IN_FLIGHT,
@@ -137,7 +138,7 @@ class Warehouse:
         """DDL bootstrap (reference app/main.py:30-32): materialize empty tables."""
         for table, schema in TABLE_SCHEMAS.items():
             if not os.path.exists(self.path(table)):
-                empty = self.spark.createDataFrame([], schema)
+                empty = local_frame(self.spark, [], schema)
                 self._write(empty, table, mode="overwrite")
 
     def read(self, table: str) -> DataFrame:
@@ -500,7 +501,7 @@ class TransactionalWarehouse(Warehouse):
         schema = self.table_schema(table)  # validates the table exists
         # fail fast on bad syntax or unknown columns: analyze the
         # predicate against an empty frame of the table schema (no job)
-        self.spark.createDataFrame([], schema).filter(
+        local_frame(self.spark, [], schema).filter(
             F.expr(predicate_sql)
         ).schema
         self._constraints.setdefault(table, {})[name] = predicate_sql
@@ -846,7 +847,7 @@ class TransactionalWarehouse(Warehouse):
         )
         for cname, sql in self._constraints.get(table, {}).items():
             try:
-                self.spark.createDataFrame([], renamed).filter(
+                local_frame(self.spark, [], renamed).filter(
                     F.expr(sql)
                 ).schema
             except Exception as exc:
@@ -1314,7 +1315,7 @@ class TransactionalWarehouse(Warehouse):
     def _read_changes_runs(self, table: str, runs: list[str]) -> DataFrame:
         schema = self.table_schema(table)
         if not runs:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         expired = [r for r in runs if not os.path.isdir(self.run_dir(table, r))]
         if expired:
             raise IncrementalWindowExpiredError(
@@ -2038,7 +2039,7 @@ class TransactionalWarehouse(Warehouse):
             )
         with_run = T.StructType(schema.fields + extra_fields)
         if not committed:
-            empty = self.spark.createDataFrame([], with_run)
+            empty = local_frame(self.spark, [], with_run)
             return empty if keep_run else empty.drop(RUN_ID_COL)
         renames = self._renames_for(table)
         specs = self._spec_changes_for(table)
@@ -3028,7 +3029,7 @@ class TransactionalWarehouse(Warehouse):
             schema.fields + [T.StructField(RUN_ID_COL, T.StringType(), True)]
         )
         if not paths:
-            empty = self.spark.createDataFrame([], with_run)
+            empty = local_frame(self.spark, [], with_run)
             return self._apply_tombstones(empty, table), report
         renames = self._renames_for(table)
         spec_changes = self._spec_changes_for(table)

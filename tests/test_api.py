@@ -201,4 +201,132 @@ def test_list_reads_unaudited_by_default_audited_with_flag(spark, tmp_path):
     ).first()
     assert row is not None
     assert row.resource_type == "Patient" and row.resource_id is None
-    assert json.loads(row.detail)["rows"] == 2
+    assert json.loads(row.detail) == {
+        "rows": 2, "limit": 2, "offset": None, "after": None
+    }
+
+
+@pytest.fixture(scope="module")
+def served(spark, tmp_path_factory):
+    """One warehouse for the point-read tests: two committed batches, and
+    MRN-B's consent rows erased so that reading it is a 403."""
+    from healthcare_etl_pipeline_spark.plans.pipeline import ingest_batch_atomic
+
+    wh = TransactionalWarehouse(spark, str(tmp_path_factory.mktemp("served")))
+    wh.create_all()
+    ingest_batch_atomic(
+        spark, [make_patient(mrn="MRN-A"), make_patient(mrn="MRN-B")], wh
+    )
+    ingest_batch_atomic(spark, [make_patient(mrn="MRN-C")], wh)
+    ids = {r.mrn: r.id for r in wh.read("patients").collect()}
+    wh.forget({"consent_records": F.col("patient_id") == ids["MRN-B"]})
+    return EngineAPI(spark, wh, ""), wh, ids
+
+
+def test_get_audit_appends_one_read_row(served):
+    api, wh, ids = served
+    before = {r.id for r in wh.read("audit_log").collect()}
+    status, body = api.get_patient(ids["MRN-C"])
+    assert status == 200 and body["mrn"] == "MRN-C"
+    new = [r for r in wh.read("audit_log").collect() if r.id not in before]
+    assert len(new) == 1
+    row = new[0]
+    assert (row.actor, row.action, row.resource_type, row.resource_id) == (
+        "api_user", "read", "Patient", ids["MRN-C"]
+    )
+    assert row.detail is None
+    assert row.timestamp is not None and row.dt is not None
+
+
+def test_get_denied_or_missing_appends_no_audit(served):
+    api, wh, ids = served
+    before = wh.read("audit_log").count()
+    status, body = api.get_patient(ids["MRN-B"])
+    assert status == 403
+    assert body["detail"] == "Patient has not granted data sharing consent"
+    status, body = api.get_patient("no-such-id")
+    assert status == 404 and body["detail"] == "Patient not found"
+    assert wh.read("audit_log").count() == before
+
+
+def test_get_spark_jobs_bounded(served):
+    """Guard on the Spark jobs one point read launches: one scan of the
+    patient row and its granted consent rows, plus the audit write on a
+    200. Measured 2 / 1 / 1 jobs for a 200 / 403 / 404; the lookup,
+    consent check and re-executed lookup under ``localCheckpoint`` it
+    replaces took 4 for a 200."""
+    api, _, ids = served
+    sc = api.spark.sparkContext
+
+    def jobs(tag, pid):
+        group = f"get-job-guard-{tag}"
+        sc.setJobGroup(group, "point-read job-count guard")
+        try:
+            status, _ = api.get_patient(pid)
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        return status, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    status, n = jobs("200", ids["MRN-A"])
+    assert status == 200 and 0 < n <= 2, n
+    status, n = jobs("403", ids["MRN-B"])
+    assert status == 403 and 0 < n <= 1, n
+    status, n = jobs("404", "no-such-id")
+    assert status == 404 and 0 < n <= 1, n
+
+
+def test_service_frames_are_local_relations(spark, tmp_path):
+    """The frames the service builds from Python rows plan as a JVM
+    ``LocalRelation``, never a ``LogicalRDD`` over a Python RDD (whose
+    every job starts Python workers)."""
+    import datetime
+
+    from healthcare_etl_pipeline_spark.plans.dag import DAG
+    from healthcare_etl_pipeline_spark.plans.pipeline import (
+        records_to_df,
+        write_run_record,
+    )
+
+    wh = TransactionalWarehouse(spark, str(tmp_path / "wh"))
+    wh.create_all()
+    staged = {}
+
+    class Capture:
+        def stage(self, df, table):
+            staged[table] = df
+
+    now = datetime.datetime.now()
+    write_run_record(
+        wh,
+        DAG("patient_ingestion"),
+        {"status": "success", "tasks": {}, "started_at": now,
+         "completed_at": now, "context": {"extract_count": 1}},
+        txn=Capture(),
+    )
+    wh.append = lambda df, table: staged.__setitem__(table, df)
+    EngineAPI(spark, wh, "")._append_audit("read", "some-id", None)
+    frames = {
+        "records_to_df": records_to_df(spark, [make_patient()]),
+        "pipeline_runs": staged["pipeline_runs"],
+        "audit_log": staged["audit_log"],
+        "empty read": wh.read("patients"),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, (name, plan)
+
+
+def test_unroutable_consent_ingest_status(api_server):
+    """A consent that is not a dict, or a consent value that is not a
+    bool, cannot be typed: the batch is refused with a 500, as before the
+    batch was built through Arrow."""
+    base, wh = api_server
+    for consent in ("yes", {"data_sharing": "yes"}):
+        status, body = _post(
+            f"{base}/ingest", {"records": [make_patient(consent=consent)]}
+        )
+        assert status == 500, (consent, status, body)
+        assert body["detail"].startswith("PySparkTypeError"), body
+    assert wh.read("patients").count() == 0

@@ -293,3 +293,27 @@ def test_ingest_spark_jobs_bounded(spark, tmp_path):
     assert summary["status"] == "success"
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < n_jobs <= 15, n_jobs
+
+
+# What ``createDataFrame(list, RAW_PATIENT_SCHEMA)`` returned for each
+# record override (pyspark 4.1.2), pinned so the Arrow-built batch can be
+# held to it: a bool in a string field is "true"/"false", any other
+# non-str value is ``str(v)``.
+LIST_PATH_COERCION = [
+    ({"mrn": 123}, "mrn", "123"),
+    ({"mrn": True}, "mrn", "true"),
+    ({"name": 1.5}, "name", "1.5"),
+    ({"name": {"a": 1}}, "name", "{'a': 1}"),
+    ({"ssn": [1, "x"]}, "ssn", "[1, 'x']"),
+    ({"birthDate": 19800412}, "birthDate", "19800412"),
+    ({"gender": None}, "gender", None),
+    ({"consent": None}, "consent", None),
+    ({"consent": {"data_sharing": None}}, "consent", {"data_sharing": None}),
+]
+
+
+def test_records_to_df_coercion_matches_list_path(spark):
+    records = [make_patient(**o) for o, _, _ in LIST_PATH_COERCION]
+    rows = records_to_df(spark, records).collect()
+    got = [row[field] for row, (_, field, _) in zip(rows, LIST_PATH_COERCION)]
+    assert got == [want for _, _, want in LIST_PATH_COERCION]

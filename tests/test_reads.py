@@ -72,22 +72,3 @@ def test_nested_patient_shape(spark):
     by_id = {r.id: r for r in out.collect()}
     assert by_id["id-0"].consents[0].consent_type == "data_sharing"
     assert by_id["id-9"].consents is None  # no consent rows at all
-
-
-def test_audited_read_appends_audit_rows(spark, warehouse):
-    from healthcare_etl_pipeline_spark.operators.reads import audited_read
-    from healthcare_etl_pipeline_spark.plans.pipeline import ingest_batch
-    from tests.conftest import make_patient
-
-    ingest_batch(spark, [make_patient()], warehouse)
-    before = warehouse.read("audit_log").count()
-    patients = warehouse.read("patients")
-    out = audited_read(
-        warehouse, patients, actor="test-reader", resource_type="Patient"
-    )
-    assert out.count() == 1
-    audit = warehouse.read("audit_log")
-    assert audit.count() == before + 1
-    row = audit.filter(audit.actor == "test-reader").collect()[0]
-    assert row.action == "read"
-    assert row.resource_type == "Patient"

@@ -32,15 +32,17 @@ if [[ "${1:-}" == "--quick" ]]; then
   # Tier 1 — the per-commit gate, four cheap layers: the registry
   # contract (every query callable, oracle coverage sane), the fast unit
   # suites (no warehouse storms, no streaming waits), the ingest routing
-  # counts and jobs-per-ingest guard, and a 12-query oracle smoke
-  # spanning each operator family at sf0.001.
+  # counts, the jobs-per-ingest and jobs-per-read guards, the read audit
+  # rows, the LocalRelation plan shape of frames built from Python rows,
+  # and a 12-query oracle smoke spanning each operator family at sf0.001.
   echo "== quick 1/3 registry + fast unit suites"
   python -m pytest -q -x \
     tests/test_queries_registry.py tests/test_dag.py \
     tests/test_validation.py tests/test_dim_hint.py \
     tests/test_joins.py tests/test_sketch.py
-  echo "== quick 2/3 ingest routing counts + jobs-per-ingest guard"
-  python -m pytest -q -x tests/test_pipeline.py -k "counts or jobs"
+  echo "== quick 2/3 ingest/read job guards, read audit, local-frame plans"
+  python -m pytest -q -x tests/test_pipeline.py tests/test_api.py \
+    -k "counts or jobs or audit or local_relation or coercion"
   echo "== quick 3/3 oracle smoke @ ${SF0001}"
   python tools/check_oracle.py "${SF0001}" \
     q1_pricing_summary q5_revenue_by_nation dedup_exact_lineitem \
