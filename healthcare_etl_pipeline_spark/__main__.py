@@ -6,6 +6,11 @@ Usage:
     python -m healthcare_etl_pipeline_spark explain QUERY [--sf-dir DIR]
     python -m healthcare_etl_pipeline_spark ingest FILE.jsonl --warehouse DIR
     python -m healthcare_etl_pipeline_spark health
+    python -m healthcare_etl_pipeline_spark serve --warehouse DIR
+
+``ingest`` and ``serve`` open the same transactional warehouse: a batch is
+committed once, so ``serve`` shows what ``ingest`` wrote, and a failed
+``ingest`` leaves no row behind.
 """
 
 from __future__ import annotations
@@ -95,14 +100,16 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "ingest":
-        from healthcare_etl_pipeline_spark.plans.pipeline import ingest_batch
-        from healthcare_etl_pipeline_spark.sources.warehouse import Warehouse
+        from healthcare_etl_pipeline_spark.plans.pipeline import ingest
+        from healthcare_etl_pipeline_spark.sources.warehouse import (
+            TransactionalWarehouse,
+        )
 
         with open(args.file) as fh:
             records = [json.loads(line) for line in fh if line.strip()]
-        wh = Warehouse(spark, args.warehouse)
+        wh = TransactionalWarehouse(spark, args.warehouse)
         wh.create_all()
-        summary = ingest_batch(spark, records, wh, strict=args.strict)
+        summary = ingest(spark, records, wh, strict=args.strict)
         print(
             json.dumps(
                 {

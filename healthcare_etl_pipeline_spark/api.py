@@ -84,26 +84,15 @@ class EngineAPI:
         }
 
     def ingest(self, body: dict) -> tuple[int, dict]:
-        from healthcare_etl_pipeline_spark.plans.pipeline import (
-            ingest_batch,
-            ingest_batch_atomic,
-        )
-        from healthcare_etl_pipeline_spark.sources.warehouse import (
-            TransactionalWarehouse,
-        )
+        from healthcare_etl_pipeline_spark.plans.pipeline import ingest
 
         records = body.get("records")
         if not isinstance(records, list) or not 1 <= len(records) <= 1000:
             return 422, {"detail": "records must be a list of 1..1000 objects"}
-        if isinstance(self.warehouse, TransactionalWarehouse):
-            summary = ingest_batch_atomic(
-                self.spark, records, self.warehouse, actor="api_user",
-                batch_id=body.get("batch_id"),
-            )
-        else:
-            summary = ingest_batch(
-                self.spark, records, self.warehouse, actor="api_user"
-            )
+        summary = ingest(
+            self.spark, records, self.warehouse, actor="api_user",
+            batch_id=body.get("batch_id"),
+        )
         status = 200 if summary["status"] == "success" else 500
         return status, {
             "pipeline": "patient_ingestion",

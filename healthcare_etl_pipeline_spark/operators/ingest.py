@@ -8,7 +8,9 @@ app/api/routes.py:87-148):
   stamped iff granted (:106-115)                   → ``explode`` + ``when``;
 - ClinicalRecord insert of the sanitized payload (:118-124);
 - audit row per created patient (:126-133, writer app/services/audit.py:16-35);
-- one pipeline_runs row per batch (:137-147).
+- one pipeline_runs row per batch (:137-147);
+- ONE ``session.commit()`` for all of it (:148)     → every sink stages into
+  one warehouse ``Transaction``; nothing is visible until the caller commits.
 
 Deviation (documented, SURVEY.md §7.6): the reference fails the whole batch
 on one duplicate (transaction rollback). At scale, fail-the-batch on a single
@@ -25,7 +27,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from healthcare_etl_pipeline_spark.sources.warehouse import Warehouse
+from healthcare_etl_pipeline_spark.sources.warehouse import (
+    Transaction,
+    TransactionalWarehouse,
+)
 
 
 class DuplicateMrnError(RuntimeError):
@@ -128,30 +133,27 @@ def build_audit_rows(
 
 
 def load_patients(
-    warehouse: Warehouse,
+    warehouse: TransactionalWarehouse,
     transformed: DataFrame,
     *,
+    txn: Transaction,
     actor: str = "pipeline",
     strict: bool = False,
-    txn=None,
 ) -> dict[str, int]:
-    """Persist one transformed batch to the 4 data tables.
+    """Stage one transformed batch into the 4 data tables of ``txn``.
 
-    Write order is children-after-parents (SURVEY.md §7.6): patients first,
-    then consents/clinical/audit keyed by the new patient ids. Returns counts
-    for the run-metadata row.
-
-    With ``txn`` (a ``sources.warehouse.Transaction``), the four sinks STAGE
-    into the transaction instead of appending — nothing becomes visible
-    until the caller commits, reproducing the reference's single-commit
-    semantics (app/api/routes.py:148). Without it, writes are ordered
-    appends (the round-2 behavior, kept for plain ``Warehouse`` stores).
+    Patients, then consents/clinical/audit keyed by the new patient ids, all
+    under the one transaction: nothing becomes visible until the caller
+    commits it, and an aborted or crashed transaction leaves nothing
+    (reference single commit, app/api/routes.py:148). The mrn anti-join
+    reads the committed ``patients`` table. Returns counts for the
+    run-metadata row.
 
     The transformed batch is small relative to the warehouse (reference caps
     ingest batches at 1000 records, app/schemas/api.py:28), so it is
     materialized once (localCheckpoint) before the multi-sink fan-out: each
     sink must see the same non-deterministic ids/ciphertext, and the lineage
-    must not re-read the patients table it is about to append to.
+    must not re-read the patients table it is about to write under.
     """
     existing = warehouse.read("patients")
     new, conflicting = split_mrn_conflicts(transformed, existing)
@@ -160,14 +162,12 @@ def load_patients(
         if n_conflicts:
             raise DuplicateMrnError(f"{n_conflicts} records with duplicate mrn")
 
-    sink = txn.stage if txn is not None else warehouse.append
-
     # localCheckpoint (not cache): the batch lineage reads the patients table
-    # through the anti-join, so appending to patients would invalidate a plain
-    # cache (recacheByPath) and re-run the plan against the NEW table state,
-    # anti-joining the just-written rows away. Checkpointing truncates the
-    # lineage so every sink sees one immutable materialization — also required
-    # because uuid()/encrypt() are non-deterministic.
+    # through the anti-join, so a write under that path would invalidate a
+    # plain cache (recacheByPath) and re-run the plan against the NEW table
+    # state. Checkpointing truncates the lineage so every sink sees one
+    # immutable materialization — also required because uuid()/encrypt() are
+    # non-deterministic.
     batch = with_surrogate_id(new).localCheckpoint(eager=True)
     try:
         n_loaded = batch.count()
@@ -182,13 +182,13 @@ def load_patients(
             F.current_timestamp().alias("created_at"),
             F.lit(None).cast("timestamp").alias("updated_at"),
         )
-        sink(patients, "patients")
-        sink(
+        txn.stage(patients, "patients")
+        txn.stage(
             explode_consents(batch.filter(F.col("consent").isNotNull())),
             "consent_records",
         )
-        sink(build_clinical_records(batch), "clinical_records")
-        sink(
+        txn.stage(build_clinical_records(batch), "clinical_records")
+        txn.stage(
             build_audit_rows(
                 batch, actor=actor, action="create", resource_type="Patient"
             ),

@@ -11,6 +11,9 @@ Re-expresses reference app/etl/pipeline.py:135-143 (factory wiring the fixed
   the validate, check_consent and transform stages only declare their
   splits and report their share of that row. The load stage does the one
   real materialization (a local checkpoint before the multi-sink fan-out).
+- One write path: ``ingest`` opens one warehouse transaction per batch; the
+  load stage and the ``pipeline_runs`` row stage into it and one commit
+  publishes all five tables (reference routes.py:148), or none of them.
 - Not ``observe()``: with AQE on (Spark 4.1), empty-relation propagation
   drops the ``CollectMetrics`` node when a branch below it is empty, so an
   all-invalid or all-blocked batch loses its metrics (``toPyRow``
@@ -43,7 +46,10 @@ from healthcare_etl_pipeline_spark.operators.validation import (
 )
 from healthcare_etl_pipeline_spark.plans.dag import DAG
 from healthcare_etl_pipeline_spark.session import local_frame
-from healthcare_etl_pipeline_spark.sources.warehouse import Warehouse
+from healthcare_etl_pipeline_spark.sources.warehouse import (
+    Transaction,
+    TransactionalWarehouse,
+)
 
 RAW_PATIENT_SCHEMA = T.StructType(
     [
@@ -107,13 +113,14 @@ def routing_counts(df: DataFrame, consent_col: Column) -> dict[str, int]:
 
 
 def build_patient_ingestion_pipeline(
-    warehouse: Warehouse | None = None,
+    warehouse: TransactionalWarehouse,
+    txn: Transaction,
     *,
     actor: str = "pipeline",
     strict: bool = False,
-    txn=None,
 ) -> DAG:
-    """The fixed 5-stage chain (reference pipeline.py:135-143).
+    """The fixed 5-stage chain (reference pipeline.py:135-143); the load
+    stage stages into ``txn``.
 
     Context keys mirror the reference stages: raw_df → validated/invalid →
     consented/blocked → transformed → load_count.
@@ -157,10 +164,8 @@ def build_patient_ingestion_pipeline(
         }
 
     def load(ctx: dict[str, Any]) -> dict[str, Any]:
-        if warehouse is None:  # dry run: no table, so no mrn conflict to route
-            return {"load_count": ctx["transform_count"]}
         return load_patients(
-            warehouse, ctx["transformed_df"], actor=actor, strict=strict, txn=txn
+            warehouse, ctx["transformed_df"], txn=txn, actor=actor, strict=strict
         )
 
     dag.add_task("extract", extract)
@@ -179,9 +184,13 @@ def harvest_record_counts(summary: dict[str, Any]) -> dict[str, int]:
 
 
 def write_run_record(
-    warehouse: Warehouse, dag: DAG, summary: dict[str, Any], txn=None
+    warehouse: TransactionalWarehouse,
+    dag: DAG,
+    summary: dict[str, Any],
+    txn: Transaction,
 ) -> None:
-    """One pipeline_runs row per execution (reference routes.py:137-147)."""
+    """Stage one pipeline_runs row per execution into ``txn`` (reference
+    routes.py:137-147)."""
     counts = harvest_record_counts(summary)
     errors = {
         name: t["error"]
@@ -228,46 +237,27 @@ def write_run_record(
         "errors",
         "dag_definition",
     )
-    if txn is not None:
-        txn.stage(row, "pipeline_runs")
-    else:
-        warehouse.append(row, "pipeline_runs")
+    txn.stage(row, "pipeline_runs")
 
 
-def ingest_batch(
+def ingest(
     spark: SparkSession,
     records: list[dict],
-    warehouse: Warehouse | None = None,
-    *,
-    actor: str = "api",
-    strict: bool = False,
-) -> dict[str, Any]:
-    """End-to-end ingest of one batch (the reference POST /ingest path)."""
-    dag = build_patient_ingestion_pipeline(warehouse, actor=actor, strict=strict)
-    summary = dag.run({"raw_df": records_to_df(spark, records)})
-    summary["record_counts"] = harvest_record_counts(summary)
-    if warehouse is not None:
-        write_run_record(warehouse, dag, summary)
-    return summary
-
-
-def ingest_batch_atomic(
-    spark: SparkSession,
-    records: list[dict],
-    warehouse,
+    warehouse: TransactionalWarehouse,
     *,
     actor: str = "api",
     strict: bool = False,
     batch_id: str | None = None,
 ) -> dict[str, Any]:
-    """Single-commit ingest (reference app/api/routes.py:148 parity): the
-    patients, consent_records, clinical_records, audit_log AND pipeline_runs
-    rows of one batch become visible ATOMICALLY or not at all.
+    """End-to-end ingest of one batch, committed once (the reference POST
+    /ingest path, app/api/routes.py:148): the patients, consent_records,
+    clinical_records, audit_log AND pipeline_runs rows of one batch become
+    visible ATOMICALLY or not at all.
 
-    Requires a ``TransactionalWarehouse``. All five sinks stage under one
-    run_id; the commit-marker rename is the transaction boundary, so a crash
-    anywhere mid-ingest leaves no partial multi-table state — closing the
-    round-2 design's documented deviation (SURVEY §7.6). Pass a stable
+    All five sinks stage under one run_id; the commit-marker rename is the
+    transaction boundary, so a crash anywhere mid-ingest leaves no partial
+    multi-table state. A failed run (say, strict mode meeting a duplicate
+    mrn) commits nothing, not even its ``pipeline_runs`` row. Pass a stable
     ``batch_id`` for exactly-once re-runs: an already-committed batch is
     skipped, a crashed half-staged attempt is wiped and restaged.
 
@@ -294,7 +284,7 @@ def ingest_batch_atomic(
             }
         snapshot = set(warehouse.committed_runs_for("patients"))
         dag = build_patient_ingestion_pipeline(
-            warehouse, actor=actor, strict=strict, txn=txn
+            warehouse, txn, actor=actor, strict=strict
         )
         try:
             summary = dag.run({"raw_df": records_to_df(spark, records)})
@@ -303,7 +293,7 @@ def ingest_batch_atomic(
                 txn.abort()  # failed run: stage nothing, surface the summary
                 summary["txn"] = {"run_id": txn.run_id, "committed": False}
                 return summary
-            write_run_record(warehouse, dag, summary, txn=txn)
+            write_run_record(warehouse, dag, summary, txn)
             with _OCC_COMMIT_LOCK:
                 if _mrn_conflict_since(spark, warehouse, txn, snapshot):
                     txn.abort()

@@ -508,7 +508,9 @@ def stream_txn_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Simulate the crash-after-commit restart: the checkpoint never recorded
     # batch 0, so the source replays it — the sink must treat it as done.
     replay = spark.read.parquet(src).limit(50)
-    txn_batch_sink(wh, "event_log", batch_prefix="ev")(replay, 0)
+    txn_batch_sink(
+        wh, lambda txn, df: txn.stage(df, "event_log"), batch_prefix="ev"
+    )(replay, 0)
     assert len(wh.committed_run_ids()) == n_batches, "replay must not re-commit"
 
     return (

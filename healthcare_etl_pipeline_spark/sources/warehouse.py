@@ -1,9 +1,11 @@
-"""Warehouse: the 5 reference tables as partitioned Parquet directories.
+"""Warehouse: the 5 reference tables as partitioned Parquet directories,
+written only through transactions (``TransactionalWarehouse``).
 
 Re-expresses the reference's PostgreSQL schema (reference:
 app/models/patient.py — patients :34-52, consent_records :58-76,
-clinical_records :82-99, audit_log :105-116, pipeline_runs :122-136) and the
-DDL bootstrap (app/main.py:30-32 `create_all`).
+clinical_records :82-99, audit_log :105-116, pipeline_runs :122-136), the
+DDL bootstrap (app/main.py:30-32 `create_all`) and its one-commit ingest
+(app/api/routes.py:148).
 
 Physical design for 100 TB (SURVEY.md §1.4):
 - `clinical_records` partitioned by `resource_type` — replaces the reference's
@@ -122,82 +124,6 @@ CONSENT_TYPES = ("data_sharing", "research", "treatment")
 RUN_STATUSES = ("pending", "running", "completed", "failed")
 
 
-class Warehouse:
-    """A directory-backed warehouse of the 5 reference tables."""
-
-    def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root
-
-    def path(self, table: str) -> str:
-        if table not in TABLE_SCHEMAS:
-            raise KeyError(f"unknown warehouse table {table!r}")
-        return os.path.join(self.root, table)
-
-    def create_all(self) -> None:
-        """DDL bootstrap (reference app/main.py:30-32): materialize empty tables."""
-        for table, schema in TABLE_SCHEMAS.items():
-            if not os.path.exists(self.path(table)):
-                empty = local_frame(self.spark, [], schema)
-                self._write(empty, table, mode="overwrite")
-
-    def read(self, table: str) -> DataFrame:
-        return self.spark.read.schema(TABLE_SCHEMAS[table]).parquet(self.path(table))
-
-    def append(self, df: DataFrame, table: str) -> None:
-        """Append-only write; columns are aligned to the declared schema."""
-        schema = TABLE_SCHEMAS[table]
-        aligned = df.select(
-            *[df[f.name].cast(f.dataType).alias(f.name) for f in schema.fields]
-        )
-        self._write(aligned, table, mode="append")
-
-    def _write(self, df: DataFrame, table: str, mode: str) -> None:
-        writer = df.write.mode(mode)
-        parts = PARTITION_COLUMNS[table]
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(self.path(table))
-
-    def compact(
-        self, table: str, *, target_file_mb: float = 128, sort_by: str | None = None
-    ) -> int:
-        """Rewrite a table into size-targeted files (small-files maintenance).
-
-        Streaming/micro-batch appends leave one small file per batch per
-        partition; at scale the file count, not the byte count, dominates
-        scan planning and open() overhead. Compaction reads the table,
-        coalesces to ceil(bytes / target) files, optionally sorts within
-        partitions (tighter parquet min/max stats → better row-group
-        pruning on ``sort_by`` predicates), and atomically swaps via a
-        staged directory + rename. Returns the new file count.
-        """
-        import math
-        import pathlib
-        import shutil
-
-        path = self.path(table)
-        current = self.read(table)
-        n_bytes = sum(
-            f.stat().st_size for f in pathlib.Path(path).rglob("*.parquet")
-        )
-        n_files = max(1, math.ceil(n_bytes / (target_file_mb * 1024 * 1024)))
-        compacted = current.repartition(n_files)
-        if sort_by:
-            compacted = compacted.sortWithinPartitions(sort_by)
-        staging = path + ".compact.tmp"
-        writer = compacted.write.mode("overwrite")
-        parts = PARTITION_COLUMNS[table]
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(staging)
-        old = path + ".compact.old"
-        shutil.move(path, old)
-        shutil.move(staging, path)
-        shutil.rmtree(old)
-        return n_files
-
-
 # ---------------------------------------------------------------------------
 # Transactional warehouse: multi-table atomic ingest (reference parity)
 # ---------------------------------------------------------------------------
@@ -286,7 +212,7 @@ class Transaction:
         #: warehouse handle that opened it, so every existing DML verb
         #: (merge/delete_where/compact/rollback/...) is branch-aware for
         #: free when invoked through a branch view
-        self.branch: str | None = getattr(warehouse, "_ref", None)
+        self.branch: str | None = warehouse._ref
         self.extra_manifest: dict = {}  # merge_branch provenance etc.
         self._done = False
         self._already_committed = False  # set by begin() for committed ids
@@ -314,9 +240,7 @@ class Transaction:
                     f"staged frame for {table!r} lacks required column {f.name!r}"
                 )
         aligned = df.select(*cols)
-        check = getattr(self._wh, "check_constraints", None)
-        if check is not None:
-            check(aligned, table)
+        self._wh.check_constraints(aligned, table)
         writer = aligned.write.mode("append")
         parts = self._wh.partition_columns(table)
         if parts:
@@ -430,8 +354,9 @@ class SnapshotReader:
         return self._wh.read(table, as_of=self.as_of)
 
 
-class TransactionalWarehouse(Warehouse):
-    """Warehouse with an atomic multi-table commit protocol.
+class TransactionalWarehouse:
+    """A directory-backed warehouse of the 5 reference tables (plus any
+    registered extra tables) with an atomic multi-table commit protocol.
 
     Closes the reference's single-transaction ingest semantics
     (reference app/api/routes.py:148 — patients + consents + clinical +
@@ -450,8 +375,7 @@ class TransactionalWarehouse(Warehouse):
       committed-id set lives in a marker directory (one tiny JSON per
       batch; the listing is the metastore round-trip, not a data scan).
     - A crash anywhere before the marker rename leaves every staged file
-      invisible to every reader — no partial multi-table state, the
-      failure the round-2 ordered-append design could not rule out.
+      invisible to every reader — no partial multi-table state.
     - Idempotent re-ingest: pass a stable ``batch_id`` to :meth:`begin`;
       a re-run of an already-committed batch becomes a no-op, and a
       half-staged crashed attempt is wiped and restaged cleanly.
@@ -465,7 +389,8 @@ class TransactionalWarehouse(Warehouse):
         root: str,
         backend: CommitBackend | None = None,
     ):
-        super().__init__(spark, root)
+        self.spark = spark
+        self.root = root
         #: storage primitives the commit protocol rests on — LocalFSBackend
         #: (POSIX rename/link) by default; pass ConditionalPutBackend for
         #: S3-class stores with no atomic rename (commit_backend.py)
@@ -912,9 +837,9 @@ class TransactionalWarehouse(Warehouse):
         return [*TABLE_SCHEMAS, *self._extra_schemas]
 
     def path(self, table: str) -> str:
-        if table in self._extra_schemas:
-            return os.path.join(self.root, table)
-        return super().path(table)
+        if table not in TABLE_SCHEMAS and table not in self._extra_schemas:
+            raise KeyError(f"unknown warehouse table {table!r}")
+        return os.path.join(self.root, table)
 
     def txn_root(self) -> str:
         return os.path.join(self.root, "_txn")
@@ -1668,8 +1593,11 @@ class TransactionalWarehouse(Warehouse):
             # branch's view but must survive a union merge: never retire
             # them. Under ff (conflicts refused above) the set is empty
             # and removes degrades to the plain live_main - live_branch.
+            # The log is re-read AFTER live_main: a concurrent merge that
+            # committed since all_ms was read put its adopted runs into
+            # live_main, and only the newer log lists them as post-fork.
             main_post_fork: set[str] = set()
-            for m in all_ms:
+            for m in self._read_manifests():
                 if not m.get("branch") and m.get("seq", 0) > base:
                     if t in m.get("tables", ()):
                         main_post_fork.add(m["run_id"])

@@ -12,19 +12,26 @@ streaming share one code path, so parity holds by construction.
 Scale notes:
 - ``foreachBatch`` is the right sink here because the load stage fans out
   to four tables; per-row sinks would re-shuffle per table.
-- Exactly-once: the file source + checkpointLocation give at-least-once
-  re-delivery of micro-batches on restart; the load stage's mrn anti-join
-  makes patient inserts idempotent across redelivery (conflicts route to
-  the side-output, they don't duplicate).
+- Exactly-once: each micro-batch is ONE warehouse transaction
+  (``streaming.txn_sink.txn_batch_sink``) whose run id is keyed by the
+  checkpoint and the checkpoint-stable batch id. A restart from the same
+  checkpoint replays a committed batch as a no-op (its commit marker
+  exists) and restages a batch that crashed mid-write from scratch, so a
+  crash never leaves patients without their consent, clinical and audit
+  rows. A second checkpoint over the same files is a new stream: its
+  patients meet the mrn anti-join and route as conflicts.
 """
 
 from __future__ import annotations
+
+import hashlib
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from healthcare_etl_pipeline_spark.plans.pipeline import RAW_PATIENT_SCHEMA
-from healthcare_etl_pipeline_spark.sources.warehouse import Warehouse
+from healthcare_etl_pipeline_spark.sources.warehouse import TransactionalWarehouse
 
 
 def patient_record_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -34,14 +41,14 @@ def patient_record_stream(spark: SparkSession, path: str) -> DataFrame:
 
 def streaming_patient_ingest(
     stream: DataFrame,
-    warehouse: Warehouse,
+    warehouse: TransactionalWarehouse,
     *,
     checkpoint_dir: str,
     actor: str = "stream",
 ) -> StreamingQuery:
-    """Run the batch pipeline operators per micro-batch; bounded by
-    ``availableNow`` (callers await termination for a drain-style run, or
-    drop the trigger for continuous ingest)."""
+    """Run the batch pipeline operators per micro-batch, one transaction
+    each; bounded by ``availableNow`` (callers await termination for a
+    drain-style run, or drop the trigger for continuous ingest)."""
     from pyspark.sql import functions as F
 
     from healthcare_etl_pipeline_spark.operators.consent import consent_gate
@@ -51,14 +58,27 @@ def streaming_patient_ingest(
         PATIENT_RULES,
         validate_split,
     )
+    from healthcare_etl_pipeline_spark.streaming.txn_sink import txn_batch_sink
+
+    ckpt_key = hashlib.sha1(os.path.abspath(checkpoint_dir).encode()).hexdigest()
+    batch_prefix = f"ingest-{ckpt_key[:12]}"
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        valid, _invalid = validate_split(batch_df, PATIENT_RULES)
-        consented, _blocked = consent_gate(
-            valid, consent_col=F.col("consent")["data_sharing"]
+        def write(txn, df: DataFrame) -> None:
+            valid, _invalid = validate_split(df, PATIENT_RULES)
+            consented, _blocked = consent_gate(
+                valid, consent_col=F.col("consent")["data_sharing"]
+            )
+            load_patients(
+                warehouse,
+                transform_patients(consented),
+                txn=txn,
+                actor=f"{actor}:batch={batch_id}",
+            )
+
+        txn_batch_sink(warehouse, write, batch_prefix=batch_prefix)(
+            batch_df, batch_id
         )
-        transformed = transform_patients(consented)
-        load_patients(warehouse, transformed, actor=f"{actor}:batch={batch_id}")
 
     return (
         stream.writeStream.foreachBatch(process)

@@ -21,17 +21,27 @@ tiny marker rename, so throughput is governed by the write itself.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from healthcare_etl_pipeline_spark.sources.warehouse import TransactionalWarehouse
+from healthcare_etl_pipeline_spark.sources.warehouse import (
+    Transaction,
+    TransactionalWarehouse,
+)
 
 
 def txn_batch_sink(
-    warehouse: TransactionalWarehouse, table: str, *, batch_prefix: str = "stream"
+    warehouse: TransactionalWarehouse,
+    write: Callable[[Transaction, DataFrame], None],
+    *,
+    batch_prefix: str = "stream",
 ):
     """Build the ``foreachBatch`` callable: one transaction per micro-batch,
-    keyed by the checkpoint-stable batch_id (idempotent under replay)."""
+    keyed by the checkpoint-stable batch_id (idempotent under replay).
+    ``write(txn, batch_df)`` stages the batch into any number of tables;
+    they all commit together."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         run_id = f"{batch_prefix}-{int(batch_id):09d}"
@@ -39,7 +49,7 @@ def txn_batch_sink(
             return  # replayed batch after a post-commit crash
         txn = warehouse.begin(run_id)
         try:
-            txn.stage(batch_df, table)
+            write(txn, batch_df)
         except Exception:
             txn.abort()
             raise
@@ -61,7 +71,11 @@ def run_stream_to_txn(
     exactly-once semantics; returns the finished query."""
     q = (
         stream_df.writeStream.foreachBatch(
-            txn_batch_sink(warehouse, table, batch_prefix=batch_prefix)
+            txn_batch_sink(
+                warehouse,
+                lambda txn, df: txn.stage(df, table),
+                batch_prefix=batch_prefix,
+            )
         )
         .outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir)

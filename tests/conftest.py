@@ -1,7 +1,7 @@
 import pytest
 
 from healthcare_etl_pipeline_spark.session import get_spark, tune_for_local_tests
-from healthcare_etl_pipeline_spark.sources.warehouse import Warehouse
+from healthcare_etl_pipeline_spark.sources.warehouse import TransactionalWarehouse
 
 
 @pytest.fixture(scope="session")
@@ -20,7 +20,7 @@ def spark():
 
 @pytest.fixture
 def warehouse(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "warehouse"))
+    wh = TransactionalWarehouse(spark, str(tmp_path / "warehouse"))
     wh.create_all()
     return wh
 

@@ -165,14 +165,12 @@ def test_list_reads_unaudited_by_default_audited_with_flag(spark, tmp_path):
     """SURVEY §3.3: the reference audits point reads but NOT list reads —
     default replicates that as-is; audit_list_reads=True opts in to ONE
     audit row per served page (page-level, never per-row)."""
-    from healthcare_etl_pipeline_spark.plans.pipeline import (
-        ingest_batch_atomic,
-    )
+    from healthcare_etl_pipeline_spark.plans.pipeline import ingest
     from tests.conftest import make_patient
 
     wh = TransactionalWarehouse(spark, str(tmp_path / "audit_wh"))
     wh.create_all()
-    ingest_batch_atomic(
+    ingest(
         spark,
         [make_patient(mrn=f"MRN-{i:03d}") for i in range(3)],
         wh,
@@ -210,14 +208,14 @@ def test_list_reads_unaudited_by_default_audited_with_flag(spark, tmp_path):
 def served(spark, tmp_path_factory):
     """One warehouse for the point-read tests: two committed batches, and
     MRN-B's consent rows erased so that reading it is a 403."""
-    from healthcare_etl_pipeline_spark.plans.pipeline import ingest_batch_atomic
+    from healthcare_etl_pipeline_spark.plans.pipeline import ingest
 
     wh = TransactionalWarehouse(spark, str(tmp_path_factory.mktemp("served")))
     wh.create_all()
-    ingest_batch_atomic(
+    ingest(
         spark, [make_patient(mrn="MRN-A"), make_patient(mrn="MRN-B")], wh
     )
-    ingest_batch_atomic(spark, [make_patient(mrn="MRN-C")], wh)
+    ingest(spark, [make_patient(mrn="MRN-C")], wh)
     ids = {r.mrn: r.id for r in wh.read("patients").collect()}
     wh.forget({"consent_records": F.col("patient_id") == ids["MRN-B"]})
     return EngineAPI(spark, wh, ""), wh, ids

@@ -15,7 +15,7 @@ import threading
 
 import pytest
 
-from healthcare_etl_pipeline_spark.plans.pipeline import ingest_batch_atomic
+from healthcare_etl_pipeline_spark.plans.pipeline import ingest
 from healthcare_etl_pipeline_spark.sources.commit_backend import (
     EXISTS,
     IN_FLIGHT,
@@ -130,12 +130,12 @@ def test_conditional_put_claimed_but_incomplete_is_in_flight(tmp_path):
 
 
 def test_ingest_commit_read_roundtrip(spark, twh):
-    summary = ingest_batch_atomic(spark, [make_patient()], twh, batch_id="b1")
+    summary = ingest(spark, [make_patient()], twh, batch_id="b1")
     assert summary["txn"]["committed"] is True
     assert twh.read("patients").count() == 1
     assert twh.read("consent_records").count() == 2
     # idempotent re-run is a no-op
-    again = ingest_batch_atomic(spark, [make_patient()], twh, batch_id="b1")
+    again = ingest(spark, [make_patient()], twh, batch_id="b1")
     assert again["status"] == "skipped"
     assert twh.read("patients").count() == 1
 
@@ -246,7 +246,7 @@ def test_concurrent_distinct_batches_all_commit_with_unique_seqs(spark, twh):
 def test_fsck_and_vacuum_ignore_publish_claims(spark, twh, tmp_path):
     """Object-store claim files (``<dest>.publish``) are plumbing: never
     misread as orphan runs, and reclaimed once their run dir is gone."""
-    ingest_batch_atomic(spark, [make_patient()], twh, batch_id="ok1")
+    ingest(spark, [make_patient()], twh, batch_id="ok1")
     # a dead half-publish: claim exists, dest incomplete, no marker
     txn = twh.begin()
     dead_dest = twh.run_dir("pipeline_runs", txn.run_id)
@@ -279,10 +279,10 @@ def test_crash_mid_copy_then_retry_republishes(spark, tmp_path):
     )
     wh.create_all()
     with pytest.raises(KeyboardInterrupt):
-        ingest_batch_atomic(spark, [make_patient()], wh, batch_id="crashy")
+        ingest(spark, [make_patient()], wh, batch_id="crashy")
     assert wh.read("patients").count() == 0  # half-copy invisible
     state["arm"] = False  # retry runs clean
-    summary = ingest_batch_atomic(spark, [make_patient()], wh, batch_id="crashy")
+    summary = ingest(spark, [make_patient()], wh, batch_id="crashy")
     assert summary["txn"]["committed"] is True
     assert wh.read("patients").count() == 1
     assert wh.read("consent_records").count() == 2

@@ -5,20 +5,13 @@ import json
 import pytest
 
 from healthcare_etl_pipeline_spark.functions.encryption import make_decrypt_udf
-from healthcare_etl_pipeline_spark.plans.pipeline import (
-    ingest_batch,
-    ingest_batch_atomic,
-    records_to_df,
-)
-from healthcare_etl_pipeline_spark.sources.warehouse import (
-    TransactionalWarehouse,
-    Warehouse,
-)
+from healthcare_etl_pipeline_spark.plans.pipeline import ingest, records_to_df
+from healthcare_etl_pipeline_spark.sources.warehouse import TransactionalWarehouse
 from tests.conftest import make_patient
 
 
 def test_happy_path_loads_one_record(spark, warehouse):
-    summary = ingest_batch(spark, [make_patient()], warehouse)
+    summary = ingest(spark, [make_patient()], warehouse)
 
     assert summary["status"] == "success"
     assert summary["record_counts"]["extract_count"] == 1
@@ -52,7 +45,7 @@ def test_happy_path_loads_one_record(spark, warehouse):
 
 
 def test_invalid_record_routed_not_loaded(spark, warehouse):
-    summary = ingest_batch(
+    summary = ingest(
         spark, [make_patient(mrn=None, name=None)], warehouse
     )
     counts = summary["record_counts"]
@@ -63,7 +56,7 @@ def test_invalid_record_routed_not_loaded(spark, warehouse):
 
 
 def test_no_consent_blocked(spark, warehouse):
-    summary = ingest_batch(
+    summary = ingest(
         spark, [make_patient(consent={"data_sharing": False})], warehouse
     )
     counts = summary["record_counts"]
@@ -74,7 +67,7 @@ def test_no_consent_blocked(spark, warehouse):
 
 
 def test_missing_consent_blocked(spark, warehouse):
-    summary = ingest_batch(spark, [make_patient(consent=None)], warehouse)
+    summary = ingest(spark, [make_patient(consent=None)], warehouse)
     assert summary["record_counts"]["blocked_count"] == 1
     assert summary["record_counts"]["load_count"] == 0
 
@@ -86,7 +79,7 @@ def test_mixed_batch(spark, warehouse):
         make_patient(mrn="MRN-002", name="John Roe", consent={"data_sharing": False}),
         make_patient(mrn="MRN-003", name=None),  # invalid
     ]
-    summary = ingest_batch(spark, batch, warehouse)
+    summary = ingest(spark, batch, warehouse)
     counts = summary["record_counts"]
     assert counts["extract_count"] == 3
     assert counts["valid_count"] == 2
@@ -105,23 +98,23 @@ def test_batch_size_limits(spark):
 
 
 def test_duplicate_mrn_conflict_routing(spark, warehouse):
-    ingest_batch(spark, [make_patient()], warehouse)
+    ingest(spark, [make_patient()], warehouse)
     # same mrn again: default mode routes the conflict aside, loads nothing new
-    summary = ingest_batch(spark, [make_patient(name="Other Person")], warehouse)
+    summary = ingest(spark, [make_patient(name="Other Person")], warehouse)
     assert summary["record_counts"]["load_count"] == 0
     assert warehouse.read("patients").count() == 1
 
 
 def test_duplicate_mrn_strict_raises(spark, warehouse):
-    ingest_batch(spark, [make_patient()], warehouse)
-    summary = ingest_batch(spark, [make_patient()], warehouse, strict=True)
+    ingest(spark, [make_patient()], warehouse)
+    summary = ingest(spark, [make_patient()], warehouse, strict=True)
     # strict mode: the load stage fails (reference 409 semantics)
     assert summary["status"] == "failed"
     assert "DuplicateMrnError" in summary["tasks"]["load"]["error"]
 
 
 def test_run_record_written(spark, warehouse):
-    ingest_batch(spark, [make_patient()], warehouse)
+    ingest(spark, [make_patient()], warehouse)
     runs = warehouse.read("pipeline_runs").collect()
     assert len(runs) == 1
     run = runs[0]
@@ -154,7 +147,9 @@ def test_run_record_timestamps_span_slow_stage(spark, warehouse):
     dag.add_task("sleepy", lambda ctx: _time.sleep(0.3) or {"extract_count": 0})
     before = datetime.utcnow()
     summary = dag.run({})
-    write_run_record(warehouse, dag, summary)
+    txn = warehouse.begin()
+    write_run_record(warehouse, dag, summary, txn)
+    assert txn.commit()
     after = datetime.utcnow()
     run = [r for r in warehouse.read("pipeline_runs").collect()
            if r.pipeline_name == "slow_pipeline"][0]
@@ -164,7 +159,7 @@ def test_run_record_timestamps_span_slow_stage(spark, warehouse):
 
 
 def test_audit_rows_written(spark, warehouse):
-    ingest_batch(spark, [make_patient()], warehouse)
+    ingest(spark, [make_patient()], warehouse)
     audit = warehouse.read("audit_log").collect()
     assert len(audit) == 1
     assert audit[0].action == "create"
@@ -172,7 +167,7 @@ def test_audit_rows_written(spark, warehouse):
 
 
 def test_consent_explode_rows(spark, warehouse):
-    ingest_batch(spark, [make_patient()], warehouse)
+    ingest(spark, [make_patient()], warehouse)
     consents = {
         (r.consent_type, r.granted): r for r in warehouse.read("consent_records").collect()
     }
@@ -186,14 +181,14 @@ def test_intra_batch_duplicate_mrn_all_routed(spark, warehouse):
     """Two same-mrn records in ONE batch: both are conflicts, neither loads
     (reference: the second insert 409s the whole batch)."""
     batch = [make_patient(), make_patient(name="Other Person")]
-    summary = ingest_batch(spark, batch, warehouse)
+    summary = ingest(spark, batch, warehouse)
     assert summary["record_counts"]["load_count"] == 0
     assert warehouse.read("patients").count() == 0
 
 
 def test_intra_batch_duplicate_mrn_strict_raises(spark, warehouse):
     batch = [make_patient(), make_patient(name="Other Person")]
-    summary = ingest_batch(spark, batch, warehouse, strict=True)
+    summary = ingest(spark, batch, warehouse, strict=True)
     assert summary["status"] == "failed"
     assert "DuplicateMrnError" in summary["tasks"]["load"]["error"]
 
@@ -204,20 +199,14 @@ def _txn_warehouse(spark, tmp_path):
     return wh
 
 
-def _ingest_plain(spark, records, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "warehouse"))
-    wh.create_all()
-    return ingest_batch(spark, records, wh)
-
-
 def _ingest_atomic(spark, records, tmp_path):
-    summary = ingest_batch_atomic(spark, records, _txn_warehouse(spark, tmp_path))
+    summary = ingest(spark, records, _txn_warehouse(spark, tmp_path))
     assert summary["txn"]["committed"] == (summary["status"] == "success")
     return summary
 
 
 INGEST_PATHS = pytest.mark.parametrize(
-    "ingest", [_ingest_plain, _ingest_atomic], ids=["plain", "atomic"]
+    "ingest_path", [_ingest_atomic], ids=["atomic"]
 )
 
 
@@ -244,16 +233,16 @@ def _counts(extract, valid, consented, load):
     ],
     ids=["all_invalid", "all_blocked"],
 )
-def test_routing_counts_exact(spark, tmp_path, ingest, records, expected):
-    summary = ingest(spark, records, tmp_path)
+def test_routing_counts_exact(spark, tmp_path, ingest_path, records, expected):
+    summary = ingest_path(spark, records, tmp_path)
     assert summary["status"] == "success"
     assert summary["record_counts"] == expected
 
 
 def test_routing_counts_strict_duplicate_fails_load(spark, tmp_path):
     twh = _txn_warehouse(spark, tmp_path)
-    ingest_batch_atomic(spark, [make_patient()], twh)
-    summary = ingest_batch_atomic(spark, [make_patient()], twh, strict=True)
+    ingest(spark, [make_patient()], twh)
+    summary = ingest(spark, [make_patient()], twh, strict=True)
     assert summary["status"] == "failed"
     assert summary["txn"]["committed"] is False
     assert "DuplicateMrnError" in summary["tasks"]["load"]["error"]
@@ -279,13 +268,13 @@ def test_ingest_spark_jobs_bounded(spark, tmp_path):
         make_patient(mrn="MRN-003", name=None),
         make_patient(mrn="MRN-004", name="Ana Diaz"),
     ]
-    ingest_batch_atomic(spark, batch, twh)
+    ingest(spark, batch, twh)
     batch = [dict(r, mrn=f"{r['mrn']}-B") for r in batch]
     sc = spark.sparkContext
     group = f"ingest-job-guard-{tmp_path.name}"
     sc.setJobGroup(group, "ingest job-count guard")
     try:
-        summary = ingest_batch_atomic(spark, batch, twh)
+        summary = ingest(spark, batch, twh)
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description",
                     "spark.job.interruptOnCancel"):

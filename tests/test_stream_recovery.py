@@ -112,7 +112,9 @@ def test_txn_sink_exactly_once_across_crash_replay(spark, tmp_path):
     wh.register_table("events_sink", EVENT_SCHEMA)
     wh.create_all()
 
-    base = txn_batch_sink(wh, "events_sink", batch_prefix="s")
+    base = txn_batch_sink(
+        wh, lambda txn, df: txn.stage(df, "events_sink"), batch_prefix="s"
+    )
     crashed = {"done": False}
 
     def sink(batch_df, batch_id):
@@ -260,7 +262,9 @@ def test_pyds_source_txn_sink_exactly_once_across_crash(spark, tmp_path):
         txn.stage(spark.createDataFrame(pairs, schema), "tbl")
         assert txn.commit()
 
-    base = txn_batch_sink(dst_wh, "mirror", batch_prefix="cdc")
+    base = txn_batch_sink(
+        dst_wh, lambda txn, df: txn.stage(df, "mirror"), batch_prefix="cdc"
+    )
     crashed = {"done": False}
 
     def sink(batch_df, batch_id):

@@ -200,3 +200,63 @@ def test_streaming_patient_ingest_foreachbatch(spark, warehouse, tmp_path):
     )
     q2.awaitTermination(120)
     assert warehouse.read("patients").count() == 2
+
+
+def test_streaming_patient_ingest_crash_replay(spark, warehouse, tmp_path, monkeypatch):
+    """A micro-batch that fails after its patients are staged commits
+    nothing; the restart from the same checkpoint replays it under the same
+    run id and writes every table of the batch, children included."""
+    import json
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from healthcare_etl_pipeline_spark.operators import ingest as ingest_ops
+    from healthcare_etl_pipeline_spark.sources.warehouse import TABLE_SCHEMAS
+    from healthcare_etl_pipeline_spark.streaming.ingest_stream import (
+        patient_record_stream,
+        streaming_patient_ingest,
+    )
+    from tests.conftest import make_patient
+
+    src = tmp_path / "incoming"
+    src.mkdir()
+    batch = [
+        make_patient(),
+        make_patient(mrn="MRN-002", name="John Roe", consent={"data_sharing": False}),
+        make_patient(mrn="MRN-003", name=None),  # invalid
+        make_patient(mrn="MRN-004", name="Ana Diaz"),
+    ]
+    (src / "batch1.jsonl").write_text("\n".join(json.dumps(r) for r in batch))
+    ckpt = str(tmp_path / "ckpt")
+
+    def crash(_patients):  # the consent sink runs right after patients
+        raise RuntimeError("injected crash after the patients stage")
+
+    def counts():
+        return {t: warehouse.read(t).count() for t in TABLE_SCHEMAS}
+
+    with monkeypatch.context() as m:
+        m.setattr(ingest_ops, "explode_consents", crash)
+        q = streaming_patient_ingest(
+            patient_record_stream(spark, str(src)), warehouse, checkpoint_dir=ckpt
+        )
+        with pytest.raises(StreamingQueryException):
+            q.awaitTermination(120)
+    assert set(counts().values()) == {0}
+
+    q2 = streaming_patient_ingest(
+        patient_record_stream(spark, str(src)), warehouse, checkpoint_dir=ckpt
+    )
+    q2.awaitTermination(120)
+    # the 2 valid, consented patients with their 2 consent rows each
+    assert counts() == {
+        "patients": 2,
+        "consent_records": 4,
+        "clinical_records": 2,
+        "audit_log": 2,
+        "pipeline_runs": 0,
+    }
+    assert {r.actor for r in warehouse.read("audit_log").collect()} == {
+        "stream:batch=0"
+    }

@@ -12,7 +12,7 @@ import os
 
 import pytest
 
-from healthcare_etl_pipeline_spark.plans.pipeline import ingest_batch_atomic
+from healthcare_etl_pipeline_spark.plans.pipeline import ingest
 from healthcare_etl_pipeline_spark.sources.warehouse import (
     TABLE_SCHEMAS,
     TransactionalWarehouse,
@@ -35,7 +35,7 @@ def table_counts(wh):
 
 
 def test_atomic_ingest_happy_path(spark, twh):
-    summary = ingest_batch_atomic(spark, [make_patient()], twh, batch_id="b1")
+    summary = ingest(spark, [make_patient()], twh, batch_id="b1")
     assert summary["status"] == "success"
     assert summary["txn"]["committed"] is True
     counts = table_counts(twh)
@@ -94,7 +94,7 @@ def test_rerun_after_crash_is_exactly_once(spark, twh):
         "patients",
     )
     # no commit — crash. Retry the same logical batch:
-    summary = ingest_batch_atomic(
+    summary = ingest(
         spark, [make_patient()], twh, batch_id="batch-42"
     )
     assert summary["txn"]["committed"] is True
@@ -103,16 +103,16 @@ def test_rerun_after_crash_is_exactly_once(spark, twh):
 
 
 def test_rerun_after_commit_is_skipped(spark, twh):
-    first = ingest_batch_atomic(spark, [make_patient()], twh, batch_id="b9")
+    first = ingest(spark, [make_patient()], twh, batch_id="b9")
     assert first["txn"]["committed"] is True
-    second = ingest_batch_atomic(spark, [make_patient()], twh, batch_id="b9")
+    second = ingest(spark, [make_patient()], twh, batch_id="b9")
     assert second["status"] == "skipped"
     assert twh.read("patients").count() == 1
     assert twh.read("pipeline_runs").count() == 1
 
 
 def test_reader_snapshot_excludes_uncommitted(spark, twh):
-    ingest_batch_atomic(spark, [make_patient(mrn="M1")], twh, batch_id="c1")
+    ingest(spark, [make_patient(mrn="M1")], twh, batch_id="c1")
     # open txn stages a second patient but has not committed
     from healthcare_etl_pipeline_spark.operators.transform import transform_patients
     from healthcare_etl_pipeline_spark.plans.pipeline import records_to_df
@@ -131,8 +131,8 @@ def test_reader_snapshot_excludes_uncommitted(spark, twh):
 
 def test_duplicate_mrn_across_committed_batches_routed(spark, twh):
     """The conflict anti-join sees committed state through the txn reader."""
-    ingest_batch_atomic(spark, [make_patient(mrn="DUP")], twh, batch_id="d1")
-    summary = ingest_batch_atomic(
+    ingest(spark, [make_patient(mrn="DUP")], twh, batch_id="d1")
+    summary = ingest(
         spark, [make_patient(mrn="DUP")], twh, batch_id="d2"
     )
     assert summary["record_counts"]["load_count"] == 0
@@ -141,7 +141,7 @@ def test_duplicate_mrn_across_committed_batches_routed(spark, twh):
 
 def test_transactional_compact_preserves_rows(spark, twh):
     for i in range(3):
-        ingest_batch_atomic(
+        ingest(
             spark, [make_patient(mrn=f"M{i}")], twh, batch_id=f"k{i}"
         )
     before = sorted(r.mrn for r in twh.read("patients").collect())
@@ -162,8 +162,8 @@ def test_transactional_compact_preserves_rows(spark, twh):
 def test_failed_validation_run_commits_nothing(spark, twh):
     """strict=True + duplicate mrn → the DAG captures the DuplicateMrnError,
     the run reports failed, and the aborted txn leaves zero new rows."""
-    ingest_batch_atomic(spark, [make_patient(mrn="X")], twh, batch_id="s1")
-    summary = ingest_batch_atomic(
+    ingest(spark, [make_patient(mrn="X")], twh, batch_id="s1")
+    summary = ingest(
         spark, [make_patient(mrn="X")], twh, batch_id="s2", strict=True
     )
     assert summary["status"] != "success"
@@ -178,8 +178,8 @@ def test_failed_validation_run_commits_nothing(spark, twh):
 
 
 def test_snapshots_are_sequenced(spark, twh):
-    ingest_batch_atomic(spark, [make_patient()], twh, batch_id="s1")
-    ingest_batch_atomic(
+    ingest(spark, [make_patient()], twh, batch_id="s1")
+    ingest(
         spark, [make_patient(mrn="MRN2")], twh, batch_id="s2"
     )
     snaps = twh.snapshots()
@@ -189,8 +189,8 @@ def test_snapshots_are_sequenced(spark, twh):
 
 
 def test_time_travel_read_excludes_later_commits(spark, twh):
-    ingest_batch_atomic(spark, [make_patient()], twh, batch_id="s1")
-    ingest_batch_atomic(spark, [make_patient(mrn="MRN2")], twh, batch_id="s2")
+    ingest(spark, [make_patient()], twh, batch_id="s1")
+    ingest(spark, [make_patient(mrn="MRN2")], twh, batch_id="s2")
     assert twh.read("patients").count() == 2
     assert twh.read("patients", as_of=1).count() == 1
     assert twh.read("patients", as_of="s1").count() == 1
@@ -199,8 +199,8 @@ def test_time_travel_read_excludes_later_commits(spark, twh):
 
 
 def test_time_travel_survives_compaction(spark, twh):
-    ingest_batch_atomic(spark, [make_patient()], twh, batch_id="s1")
-    ingest_batch_atomic(spark, [make_patient(mrn="MRN2")], twh, batch_id="s2")
+    ingest(spark, [make_patient()], twh, batch_id="s1")
+    ingest(spark, [make_patient(mrn="MRN2")], twh, batch_id="s2")
     twh.compact("patients")
     # current read = compacted run only, still 2 rows
     assert twh.read("patients").count() == 2
@@ -214,7 +214,7 @@ def test_time_travel_survives_compaction(spark, twh):
 
 
 def test_time_travel_unknown_run_id_raises(spark, twh):
-    ingest_batch_atomic(spark, [make_patient()], twh, batch_id="s1")
+    ingest(spark, [make_patient()], twh, batch_id="s1")
     with pytest.raises(KeyError):
         twh.read("patients", as_of="nope")
 
@@ -285,7 +285,9 @@ def test_stream_txn_sink_exactly_once(spark, twh, tmp_path):
 
     # crash-after-commit replay: same batch_id again must be a no-op
     replay = spark.read.parquet(src).limit(10)
-    txn_batch_sink(twh, "kv_log", batch_prefix="kv")(replay, 0)
+    txn_batch_sink(
+        twh, lambda txn, df: txn.stage(df, "kv_log"), batch_prefix="kv"
+    )(replay, 0)
     assert twh.read("kv_log").count() == 40
     assert len(twh.committed_run_ids()) == n_commits
 
@@ -309,8 +311,8 @@ def test_stream_txn_sink_exactly_once(spark, twh, tmp_path):
 def test_forget_erases_subject_across_tables_atomically(spark, twh):
     from pyspark.sql import functions as F
 
-    ingest_batch_atomic(spark, [make_patient()], twh, batch_id="s1")
-    ingest_batch_atomic(spark, [make_patient(mrn="MRN2")], twh, batch_id="s2")
+    ingest(spark, [make_patient()], twh, batch_id="s1")
+    ingest(spark, [make_patient(mrn="MRN2")], twh, batch_id="s2")
     pid = (
         twh.read("patients").filter(F.col("mrn") == "MRN-001").first().id
     )
@@ -349,7 +351,7 @@ def test_forget_erases_subject_across_tables_atomically(spark, twh):
 def test_forget_aborts_cleanly_on_bad_predicate(spark, twh):
     from pyspark.sql import functions as F
 
-    ingest_batch_atomic(spark, [make_patient()], twh, batch_id="s1")
+    ingest(spark, [make_patient()], twh, batch_id="s1")
     n_before = twh.read("patients").count()
     with pytest.raises(Exception):
         twh.forget({"patients": F.col("no_such_column") == 1})
@@ -361,9 +363,9 @@ def test_forget_aborts_cleanly_on_bad_predicate(spark, twh):
 
 
 def test_read_changes_returns_only_new_batches(spark, twh):
-    ingest_batch_atomic(spark, [make_patient()], twh, batch_id="s1")
-    ingest_batch_atomic(spark, [make_patient(mrn="MRN2")], twh, batch_id="s2")
-    ingest_batch_atomic(spark, [make_patient(mrn="MRN3")], twh, batch_id="s3")
+    ingest(spark, [make_patient()], twh, batch_id="s1")
+    ingest(spark, [make_patient(mrn="MRN2")], twh, batch_id="s2")
+    ingest(spark, [make_patient(mrn="MRN3")], twh, batch_id="s3")
     inc = twh.read_changes("patients", since="s1")
     assert sorted(r.mrn for r in inc.select("mrn").collect()) == ["MRN2", "MRN3"]
     # bounded window: (s1, s2]
@@ -376,8 +378,8 @@ def test_read_changes_returns_only_new_batches(spark, twh):
 
 
 def test_read_changes_skips_compaction_rewrites(spark, twh):
-    ingest_batch_atomic(spark, [make_patient()], twh, batch_id="s1")
-    ingest_batch_atomic(spark, [make_patient(mrn="MRN2")], twh, batch_id="s2")
+    ingest(spark, [make_patient()], twh, batch_id="s1")
+    ingest(spark, [make_patient(mrn="MRN2")], twh, batch_id="s2")
     twh.compact("patients")
     # the compaction commit replaces s1+s2 but adds no rows: an incremental
     # consumer that already processed s2 must see NO new rows
@@ -388,6 +390,6 @@ def test_read_changes_skips_compaction_rewrites(spark, twh):
 
 
 def test_read_changes_unknown_snapshot_raises(spark, twh):
-    ingest_batch_atomic(spark, [make_patient()], twh, batch_id="s1")
+    ingest(spark, [make_patient()], twh, batch_id="s1")
     with pytest.raises(KeyError):
         twh.read_changes("patients", since="nope")

@@ -345,3 +345,43 @@ def test_union_merge_storm_of_diverged_branches(spark, tmp_path, backend_name):
         ["row-main-pre", "row-main-post"] + [f"row-{n}" for n in names]
     )
     assert wh.fsck() == {}, wh.fsck()
+
+
+def test_union_merge_keeps_a_run_adopted_mid_merge(tmp_path, monkeypatch):
+    """The interleaving behind a lost run in the merge storm, made
+    deterministic: merge d0 commits while merge d1 sits between its
+    manifest read and its live-run read. d1's merge must not retire the
+    run d0's merge adopted."""
+    root = str(tmp_path / "wh")
+    wh = TransactionalWarehouse(None, root)
+    wh.create_all()
+    txn = wh.begin("main-pre")
+    _stage_with_pyarrow(txn, "pipeline_runs", "row-main-pre")
+    assert txn.commit()
+    for n in ("d0", "d1"):
+        wh.create_branch(n)
+        txn = wh.branch(n).begin(f"{n}-work")
+        _stage_with_pyarrow(txn, "pipeline_runs", f"row-{n}")
+        assert txn.commit()
+    txn = wh.begin("main-post")
+    _stage_with_pyarrow(txn, "pipeline_runs", "row-main-post")
+    assert txn.commit()
+
+    racer = TransactionalWarehouse(None, root)
+    pending = ["d0"]
+    live_runs = TransactionalWarehouse.committed_runs_for
+
+    def merge_d0_first(self, table, *args, **kwargs):
+        if self is wh and pending:
+            assert racer.merge_branch(pending.pop(), strategy="union")["merged"]
+        return live_runs(self, table, *args, **kwargs)
+
+    monkeypatch.setattr(
+        TransactionalWarehouse, "committed_runs_for", merge_d0_first
+    )
+    assert wh.merge_branch("d1", strategy="union")["merged"]
+    assert not pending
+    monkeypatch.undo()
+    assert TransactionalWarehouse(None, root).committed_runs_for(
+        "pipeline_runs"
+    ) == ["d0-work", "d1-work", "main-post", "main-pre"]

@@ -34,7 +34,10 @@ if [[ "${1:-}" == "--quick" ]]; then
   # suites (no warehouse storms, no streaming waits), the ingest routing
   # counts, the jobs-per-ingest and jobs-per-read guards, the read audit
   # rows, the LocalRelation plan shape of frames built from Python rows,
-  # and a 12-query oracle smoke spanning each operator family at sf0.001.
+  # the one-transaction ingest (CLI ingest visible to the server, a CLI
+  # crash mid-load leaves no row, a streaming micro-batch crash replays
+  # whole), and a 12-query oracle smoke spanning each operator family at
+  # sf0.001.
   echo "== quick 1/3 registry + fast unit suites"
   python -m pytest -q -x \
     tests/test_queries_registry.py tests/test_dag.py \
@@ -43,6 +46,9 @@ if [[ "${1:-}" == "--quick" ]]; then
   echo "== quick 2/3 ingest/read job guards, read audit, local-frame plans"
   python -m pytest -q -x tests/test_pipeline.py tests/test_api.py \
     -k "counts or jobs or audit or local_relation or coercion"
+  echo "== quick 2/3 one-transaction ingest: CLI visibility + crash, stream crash replay"
+  python -m pytest -q -x tests/test_cli.py tests/test_streaming.py \
+    -k "ingest_visible or ingest_crash or crash_replay"
   echo "== quick 3/3 oracle smoke @ ${SF0001}"
   python tools/check_oracle.py "${SF0001}" \
     q1_pricing_summary q5_revenue_by_nation dedup_exact_lineitem \
