@@ -141,24 +141,18 @@ def build_minhash_index(
     bands: int = 4,
     n: int = 3,
     hash_mode: str = "portable",
-    batch_id: str | None = None,
-    txn=None,
+    txn,
 ) -> None:
     """Bootstrap the index over an existing corpus (one signature pass —
     the LAST time the corpus text is ever read by the dedup path).
 
     The corpus itself is committed as-is (bootstrap does not dedup it;
-    run a batch dedup first if the seed corpus needs one). Pass ``txn``
-    to stage into a caller-managed transaction (e.g. alongside the corpus
-    rows themselves); otherwise a fresh one commits just the index.
+    run a batch dedup first if the seed corpus needs one). The index rows
+    are staged into the caller's ``txn`` (e.g. alongside the corpus rows
+    themselves); the caller commits it.
     """
     rows = bucket_rows(docs, id_col, text_col, k=k, bands=bands, n=n, hash_mode=hash_mode)
-    own = txn is None
-    if own:
-        txn = wh.begin(batch_id, operation="minhash-index-build")
     txn.stage(rows, index_table)
-    if own:
-        txn.commit()
 
 
 def novel_against_index(

@@ -156,16 +156,16 @@ def build_embedding_index(
     tables: int = 16,
     seed: int = 42,
     target_bucket: int = 1024,
-    batch_id: str | None = None,
-    txn=None,
+    txn,
 ) -> int:
     """Bootstrap the index over an existing corpus (one signature pass).
 
     ``planes="auto"`` sizes the bucket count from the measured corpus
     (see ``auto_planes``) — the plane count is persisted in the meta
     table so every later increment signs with the SAME hyperplanes, and
-    :func:`needs_rebucket` can detect when growth has outrun it.
-    Returns the plane count used.
+    :func:`needs_rebucket` can detect when growth has outrun it. The
+    index and meta rows are staged into the caller's ``txn``; the caller
+    commits it. Returns the plane count used.
     """
     n = corpus.count()
     p = auto_planes(n, target_bucket=target_bucket) if planes == "auto" else planes
@@ -176,16 +176,11 @@ def build_embedding_index(
     meta = corpus.sparkSession.createDataFrame(
         [(p, tables, seed, dim, threshold, n)], _META_SCHEMA
     )
-    own = txn is None
-    if own:
-        txn = wh.begin(batch_id, operation="embedding-index-build")
     txn.stage(rows, index_table)
     txn.stage(meta, _meta_table(index_table))
     txn.replaces[_meta_table(index_table)] = wh.committed_runs_for(
         _meta_table(index_table)
     )
-    if own:
-        txn.commit()
     return p
 
 

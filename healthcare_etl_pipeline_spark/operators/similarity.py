@@ -13,13 +13,15 @@ Two paths:
   registered queries wrap it in a value-checkable accuracy contract
   (exact top-k sets + an in-plan recall floor).
 
-Kernel policy, measured both ways: signatures, centroid assignment and
-candidate re-ranks run as Arrow-batched numpy kernels (one matmul/einsum
-per batch); the expression-fold forms remain for oracle-exact arithmetic
-(``cosine_fold``) and worker-free deployments (``hyperplane_signature``).
+Kernel policy: signatures, centroid assignment and candidate re-ranks run
+as Arrow-batched numpy kernels (one matmul/einsum per batch). Where an
+oracle pins the bits, cosine is the sequential ``dot_fold``/``norm_fold``
+expression (brute force, near-dup pairs), or the integer-quantized kernel
+(``make_cosine_quantized_udf``) whose sums no order can change.
 Interpreted HOF folds lose ~10× at runtime, and inlining literals into
 codegen folds loses seconds of Catalyst/Janino PLAN time per query — the
-Arrow kernel is the only shape cheap at both ends.
+Arrow kernel is the only shape cheap at both ends. Every cosine top-k ends
+in one tail, ``_top_k_per_query`` (score descending, then id ascending).
 """
 
 from __future__ import annotations
@@ -83,35 +85,27 @@ def cosine_fold(a: Column, b: Column, dim: int) -> Column:
     return dot_fold(a, b, dim) / (norm_fold(a, dim) * norm_fold(b, dim))
 
 
-def dot_fast(a: Column, b: Column) -> Column:
-    """Dot product via zip_with + aggregate (no per-element element_at)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def _top_k_per_query(
+    scored: DataFrame,
+    k: int,
+    *,
+    id_col: str = "vec_id",
+    score: Column | None = None,
+) -> DataFrame:
+    """The one top-k tail: rank each ``q_id``'s scored rows by ``cos_sim``
+    descending, ties to the lower ``id_col``, and keep ranks ``<= k``.
 
-
-def norm_fast(a: Column) -> Column:
-    """L2 norm via transform + aggregate (same expression tree as the norm
-    term inside :func:`cosine_fast` — evaluating it in an earlier projection
-    yields the identical double)."""
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-def cosine_fast(a: Column, b: Column) -> Column:
-    """Production cosine: zip_with + aggregate (no per-element element_at).
-
-    Not guaranteed bit-identical across engines — use for real workloads,
-    not oracle-checked queries.
+    Output: q_id, ``id_col``, ``score`` (default ``cos_sim`` rounded to
+    6 dp), rank.
     """
-    return dot_fast(a, b) / (norm_fast(a) * norm_fast(b))
+    if score is None:
+        score = F.round("cos_sim", 6).alias("cos_sim")
+    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc(id_col))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", id_col, score, "rank")
+    )
 
 
 def brute_force_topk(
@@ -122,7 +116,6 @@ def brute_force_topk(
     vec_col: str = "embedding",
     k: int = 5,
     dim: int = 64,
-    exact_fold: bool = True,
 ) -> DataFrame:
     """Exact cosine top-k neighbors of each query vector.
 
@@ -138,65 +131,21 @@ def brute_force_topk(
     to 1 (the norm terms for a 10-query broadcast were re-folding every
     corpus vector 10×).
     """
-    if exact_fold:
-        _norm = lambda col: norm_fold(col, dim)  # noqa: E731
-        _dot = lambda a, b: dot_fold(a, b, dim)  # noqa: E731
-    else:
-        _norm = norm_fast
-        _dot = dot_fast
     q = queries.select(
         F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("__q_norm"),
+        norm_fold(F.col(vec_col), dim).alias("__q_norm"),
     )
     c = corpus.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("__c_norm"),
+        norm_fold(F.col(vec_col), dim).alias("__c_norm"),
     )
-    cos = _dot(F.col("q_vec"), F.col("c_vec")) / (
+    cos = dot_fold(F.col("q_vec"), F.col("c_vec"), dim) / (
         F.col("__q_norm") * F.col("__c_norm")
     )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .withColumn("cos_sim", cos)
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", F.round("cos_sim", 6).alias("cos_sim"), "rank")
-    )
-
-
-def hyperplane_signature(
-    vec_col: Column, *, planes: int, dim: int, seed: int = 0
-) -> Column:
-    """Deterministic random-hyperplane LSH signature (sign pattern → bigint).
-
-    Hyperplane p's coefficient for dimension d is ±1 derived from
-    xxhash64((seed+p)*dim + d) — no stored random matrix, reproducible
-    everywhere; ``seed`` offsets the plane family so multiple hash tables
-    are independent.
-    """
-    def plane_dot(p: int) -> Column:
-        return F.aggregate(
-            F.sequence(F.lit(1), F.lit(dim)),
-            F.lit(0.0),
-            lambda acc, i: acc
-            + F.element_at(vec_col, i.cast("int")).cast("double")
-            * F.when(
-                F.xxhash64(F.lit((seed + p) * dim) + i).bitwiseAND(1) == 1,
-                F.lit(1.0),
-            ).otherwise(F.lit(-1.0)),
-        )
-
-    # Python loop over planes: shift amounts must be literal ints.
-    sig = F.lit(0).cast("long")
-    for p in range(planes):
-        sig = sig + F.when(plane_dot(p) >= 0, F.lit(1 << p).cast("long")).otherwise(0)
-    return sig
+    scored = F.broadcast(q).crossJoin(c).withColumn("cos_sim", cos)
+    return _top_k_per_query(scored, k)
 
 
 def label_centroids(
@@ -342,12 +291,7 @@ def ann_ivf_topk(
     scored = q_cells.join(c_cells, "cell").withColumn(
         "cos_sim", cosine_vectorized(F.col("q_vec"), F.col("c_vec"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", F.round("cos_sim", 6).alias("cos_sim"), "rank")
-    )
+    return _top_k_per_query(scored, k)
 
 
 def cosine_near_dup_pairs(
@@ -484,26 +428,21 @@ def embedding_dedup_lsh(
     planes: int | str = 2,
     tables: int = 16,
     seed: int = 42,
-    exact_fold: bool = True,
-    carry_vectors: bool = False,
     collapse_exact: bool = True,
     pair_sample_mod: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs behind a banded-LSH prefilter — the
     production form of ``cosine_near_dup_pairs``.
 
-    ``carry_vectors`` picks the band-join shape; both were measured on this
-    box: carrying vectors through the ×tables posexplode wins below ~1k
-    rows (fewer shuffles), the skinny id-only band join + vector re-attach
-    wins from ~2k rows on (7.1 s vs 11.5 s at 2k×64-dim, tables=16) and is
-    the only viable form at corpus scale — ×tables duplication of vector
-    bytes through a shuffle is the dominant cost long before 100 TB.
-
     Candidate generation: seeded random-hyperplane signatures (numpy matmul
     over Arrow batches), ``tables`` independent tables of ``planes`` bits;
     docs sharing ANY (table, bucket) become candidates via an equi-join —
-    the O(n²) self-join never materializes. Exact cosine re-rank + threshold
-    on the deduped candidate set.
+    the O(n²) self-join never materializes. The band join shuffles only
+    (id, table, bucket) triples; the deduped candidate pairs re-attach
+    their vectors afterwards, so vector bytes never ride the ×tables
+    explode. Re-rank + threshold on the deduped candidate set use the
+    sequential ``dot_fold``/``norm_fold`` cosine (bit-identical to the
+    oracle's fold).
 
     Few planes + many tables ⇒ high recall at moderate thresholds: a pair at
     cosine θ collides per table with prob (1-θ/π)^planes, misses all tables
@@ -560,15 +499,9 @@ def embedding_dedup_lsh(
             planes=planes,
             tables=tables,
             seed=seed,
-            exact_fold=exact_fold,
-            carry_vectors=carry_vectors,
             collapse_exact=False,
         )
-        cos_self = (
-            cosine_fold(F.col(vec_col), F.col(vec_col), dim)
-            if exact_fold
-            else cosine_vectorized(F.col(vec_col), F.col(vec_col))
-        )
+        cos_self = cosine_fold(F.col(vec_col), F.col(vec_col), dim)
         self_pairs = (
             reps.filter(F.col("__csize") >= 2)
             .select(
@@ -612,99 +545,54 @@ def embedding_dedup_lsh(
     # Checkpointed: the Arrow-batched signature matmul feeds BOTH sides of
     # the self-join; the boundary also sidesteps self-join attribute
     # ambiguity. (bounded_persist: plan-matched reuse, LRU-capped eviction.)
-    # exact_fold: fold each row's norm ONCE here (pre-join projection; same
-    # deterministic norm_fold expression → identical doubles) instead of
-    # re-folding both norms inside every candidate pair's cosine.
-    norm_cols = (
-        [norm_fold(F.col(vec_col), dim).alias("__norm")] if exact_fold else []
+    # Skinny band join: only (id, table, bucket) triples shuffle; the
+    # deduped candidate pairs re-attach vectors via two equi-joins — two
+    # extra shuffles, but a ×tables cut in shuffled vector bytes.
+    base = df.select(
+        F.col(id_col), F.col(vec_col), sig_udf(F.col(vec_col)).alias("__sigs")
+    ).transform(bounded_persist)
+    sigs = base.select(F.col(id_col), F.posexplode("__sigs").alias("table", "bucket"))
+    l, r = sigs.alias("l"), sigs.alias("r")
+    pair_ids = (
+        l.join(
+            r,
+            (F.col("l.table") == F.col("r.table"))
+            & (F.col("l.bucket") == F.col("r.bucket"))
+            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+        )
+        .select(
+            F.col(f"l.{id_col}").alias("keep_id"),
+            F.col(f"r.{id_col}").alias("dup_id"),
+        )
     )
-    if carry_vectors:
-        # Vectors ride through the ×tables posexplode into the band join —
-        # one shuffle, ×tables duplication of vector bytes. Wins while
-        # (tables × vector bytes × corpus) fits shuffle comfortably.
-        sigs = df.select(
-            F.col(id_col), F.col(vec_col), *norm_cols,
-            F.posexplode(sig_udf(F.col(vec_col))).alias("table", "bucket"),
-        ).transform(bounded_persist)
-        l, r = sigs.alias("l"), sigs.alias("r")
-        candidates = (
-            l.join(
-                r,
-                (F.col("l.table") == F.col("r.table"))
-                & (F.col("l.bucket") == F.col("r.bucket"))
-                & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-            )
-            .select(
-                F.col(f"l.{id_col}").alias("keep_id"),
-                F.col(f"l.{vec_col}").alias("a_vec"),
-                F.col(f"r.{id_col}").alias("dup_id"),
-                F.col(f"r.{vec_col}").alias("b_vec"),
-                *(
-                    [
-                        F.col("l.__norm").alias("__a_norm"),
-                        F.col("r.__norm").alias("__b_norm"),
-                    ]
-                    if exact_fold
-                    else []
-                ),
-            )
+    if pair_sample_mod:
+        pair_ids = pair_ids.filter(
+            pair_bucket("keep_id", "dup_id") % pair_sample_mod == 0
         )
-        if pair_sample_mod:
-            candidates = candidates.filter(
-                pair_bucket("keep_id", "dup_id") % pair_sample_mod == 0
-            )
-        candidates = candidates.dropDuplicates(["keep_id", "dup_id"])
-    else:
-        # Skinny band join: only (id, table, bucket) triples shuffle; the
-        # deduped candidate pairs re-attach vectors via two equi-joins —
-        # two extra shuffles, but a ×tables cut in shuffled vector bytes.
-        # The scale form: at wide vectors / high table counts the exploded
-        # vector traffic dominates everything else.
-        base = df.select(
-            F.col(id_col), F.col(vec_col), sig_udf(F.col(vec_col)).alias("__sigs")
-        ).transform(bounded_persist)
-        sigs = base.select(
-            F.col(id_col), F.posexplode("__sigs").alias("table", "bucket")
-        )
-        l, r = sigs.alias("l"), sigs.alias("r")
-        pair_ids = (
-            l.join(
-                r,
-                (F.col("l.table") == F.col("r.table"))
-                & (F.col("l.bucket") == F.col("r.bucket"))
-                & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-            )
-            .select(
-                F.col(f"l.{id_col}").alias("keep_id"),
-                F.col(f"r.{id_col}").alias("dup_id"),
-            )
-        )
-        if pair_sample_mod:
-            pair_ids = pair_ids.filter(
-                pair_bucket("keep_id", "dup_id") % pair_sample_mod == 0
-            )
-        pair_ids = pair_ids.dropDuplicates(["keep_id", "dup_id"])
-        vecs = base.select(F.col(id_col), F.col(vec_col), *norm_cols)
-        candidates = pair_ids.join(
-            vecs.select(
-                F.col(id_col).alias("keep_id"),
-                F.col(vec_col).alias("a_vec"),
-                *([F.col("__norm").alias("__a_norm")] if exact_fold else []),
-            ),
-            "keep_id",
-        ).join(
-            vecs.select(
-                F.col(id_col).alias("dup_id"),
-                F.col(vec_col).alias("b_vec"),
-                *([F.col("__norm").alias("__b_norm")] if exact_fold else []),
-            ),
-            "dup_id",
-        )
-    cos = (
-        dot_fold(F.col("a_vec"), F.col("b_vec"), dim)
-        / (F.col("__a_norm") * F.col("__b_norm"))
-        if exact_fold
-        else cosine_vectorized(F.col("a_vec"), F.col("b_vec"))
+    pair_ids = pair_ids.dropDuplicates(["keep_id", "dup_id"])
+    # each row's norm is folded ONCE here (pre-join projection; same
+    # deterministic norm_fold expression → identical doubles) instead of
+    # re-folding both norms inside every candidate pair's cosine
+    vecs = base.select(
+        F.col(id_col), F.col(vec_col), norm_fold(F.col(vec_col), dim).alias("__norm")
+    )
+    candidates = pair_ids.join(
+        vecs.select(
+            F.col(id_col).alias("keep_id"),
+            F.col(vec_col).alias("a_vec"),
+            F.col("__norm").alias("__a_norm"),
+        ),
+        "keep_id",
+    ).join(
+        vecs.select(
+            F.col(id_col).alias("dup_id"),
+            F.col(vec_col).alias("b_vec"),
+            F.col("__norm").alias("__b_norm"),
+        ),
+        "dup_id",
+    )
+    cos = dot_fold(F.col("a_vec"), F.col("b_vec"), dim) / (
+        F.col("__a_norm") * F.col("__b_norm")
     )
     return (
         candidates.withColumn("cos_sim", cos)
@@ -732,9 +620,9 @@ def make_lsh_signatures_udf(*, planes: int, tables: int, dim: int, seed: int = 4
     """Arrow-vectorized signature kernel: one matmul per batch.
 
     Random-hyperplane signing is a matrix multiply (batch×dim @ dim×(p·t)),
-    which the expression form evaluates as interpreted per-element lambda
-    folds (higher-order functions are CodegenFallback — ~10µs/step); numpy
-    does the same arithmetic ~1000× faster. The ±1 plane matrix is seeded,
+    which a Spark expression would evaluate as interpreted per-element
+    lambda folds (higher-order functions are CodegenFallback — ~10µs/step);
+    numpy does the same arithmetic ~1000× faster. The ±1 plane matrix is seeded,
     so signatures are deterministic across runs and executors.
 
     Returns a pandas UDF: array<float> -> array<bigint> (one signature per
@@ -856,7 +744,7 @@ def make_portable_lsh_signatures_udf(
     return _sigs
 
 
-def ann_lsh_topk_vectorized(
+def ann_lsh_topk(
     queries: DataFrame,
     corpus: DataFrame,
     *,
@@ -868,13 +756,13 @@ def ann_lsh_topk_vectorized(
     tables: int = 8,
     seed: int = 42,
     sig_col: str | None = None,
-    exact_fold: bool = False,
     quantized_scale: int | None = None,
 ) -> DataFrame:
-    """Banded-LSH ANN with the signature stage vectorized (numpy matmul via
-    Arrow batches); bucket semantics identical to ``ann_lsh_topk``. The
-    production variant — the expression form remains for environments where
-    Python workers are undesirable.
+    """Approximate top-k via banded LSH: a corpus vector is a candidate for
+    a query when they share a bucket in ANY of ``tables`` hash tables of
+    ``planes`` seeded hyperplanes each (numpy matmul via Arrow batches).
+    Candidates are deduped per (q_id, vec_id) before the re-rank, so the
+    cosine runs once per candidate pair however many tables collide.
 
     Stage economy (the 100 TB shape AND the job-floor shape):
     - Signatures are the ONLY Python stage. When ``sig_col`` names a
@@ -889,6 +777,9 @@ def ann_lsh_topk_vectorized(
       measured as the alternative — runtime-free of Python, but the
       ~3·dim-node expression tree costs >1 s of Catalyst/Janino work per
       query, which dominates until candidate sets reach millions of rows.)
+      With ``quantized_scale`` it is the integer-quantized kernel
+      (``make_cosine_quantized_udf``) instead, and the score column is
+      ``cos_sim_e6`` = floor(cos·1e6 + 0.5): cross-engine exact.
     """
     sig_expr = (
         F.col(sig_col)
@@ -921,23 +812,6 @@ def ann_lsh_topk_vectorized(
         cos = make_cosine_quantized_udf(scale=quantized_scale)(
             F.col("q_vec"), F.col("c_vec")
         )
-    elif exact_fold:  # bit-identical to a sequential SQL fold (oracle form)
-        # per-side norms folded once per attached row, not once per
-        # candidate pair (same deterministic expression → same doubles)
-        q_vecs = q_vecs.withColumn("__q_norm", norm_fold(F.col("q_vec"), dim))
-        c_vecs = c_vecs.withColumn("__c_norm", norm_fold(F.col("c_vec"), dim))
-        cos = dot_fold(F.col("q_vec"), F.col("c_vec"), dim) / (
-            F.col("__q_norm") * F.col("__c_norm")
-        )
-    else:
-        cos = cosine_vectorized(F.col("q_vec"), F.col("c_vec"))
-    scored = (
-        candidates.join(F.broadcast(q_vecs), "q_id")
-        .join(c_vecs, "vec_id")
-        .withColumn("cos_sim", cos)
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    if quantized_scale is not None:
         # floor(x*1e6 + 0.5) on bit-identical doubles is exactly defined —
         # unlike ROUND(double, 6), whose half-way behavior differs between
         # engines (observed 1-ulp disagreements at the 6th decimal)
@@ -947,85 +821,14 @@ def ann_lsh_topk_vectorized(
             .alias("cos_sim_e6")
         )
     else:
-        out_score = F.round("cos_sim", 6).alias("cos_sim")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", out_score, "rank")
+        cos = cosine_vectorized(F.col("q_vec"), F.col("c_vec"))
+        out_score = None
+    scored = (
+        candidates.join(F.broadcast(q_vecs), "q_id")
+        .join(c_vecs, "vec_id")
+        .withColumn("cos_sim", cos)
     )
-
-
-def lsh_bucket_array(
-    vec_col: Column, *, planes: int, tables: int, dim: int
-) -> Column:
-    """array<struct<table,bucket>>: one signature per independent hash table.
-
-    Banded LSH: with collision probability p per plane, a true neighbor is a
-    candidate with probability 1-(1-p^planes)^tables — tables boost recall,
-    planes shrink buckets. Plane indices are offset per table so tables are
-    independent.
-    """
-    sigs = [
-        F.struct(
-            F.lit(t).alias("table"),
-            hyperplane_signature(
-                vec_col, planes=planes, dim=dim, seed=t * planes
-            ).alias("bucket"),
-        )
-        for t in range(tables)
-    ]
-    return F.array(*sigs)
-
-
-def ann_lsh_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    dim: int = 64,
-    planes: int = 4,
-    tables: int = 8,
-) -> DataFrame:
-    """Approximate top-k via banded LSH: candidate = same bucket in ANY table.
-
-    At 100 TB the (table, bucket) equi-join replaces the full cross product;
-    each side explodes to ``tables`` rows, candidates are deduped per
-    (q_id, vec_id) before the exact cosine re-rank, so the expensive fold
-    runs once per candidate pair regardless of how many tables collide.
-    """
-    def sig(df: DataFrame, name: str) -> DataFrame:
-        # Boundary BEFORE explode: the signature array is a CodegenFallback
-        # HOF fold, and Generate re-evaluates a raw generator child per
-        # OUTPUT row (tables× the work). Checkpoint the arrays first.
-        with_sigs = df.select(
-            F.col(id_col).alias(name),
-            F.col(vec_col).alias(f"{name}_vec"),
-            lsh_bucket_array(
-                F.col(vec_col), planes=planes, tables=tables, dim=dim
-            ).alias("sigs"),
-        ).transform(bounded_persist)
-        return with_sigs.select(
-            name, f"{name}_vec", F.explode("sigs").alias("sig")
-        ).select(name, f"{name}_vec", "sig.table", "sig.bucket")
-
-    q = sig(queries, "q_id")
-    c = sig(corpus, "vec_id")
-    candidates = (
-        q.join(c, ["table", "bucket"])
-        .select("q_id", "q_id_vec", "vec_id", "vec_id_vec")
-        .dropDuplicates(["q_id", "vec_id"])
-    )
-    scored = candidates.withColumn(
-        "cos_sim", cosine_fast(F.col("q_id_vec"), F.col("vec_id_vec"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", F.round("cos_sim", 6).alias("cos_sim"), "rank")
-    )
+    return _top_k_per_query(scored, k, score=out_score)
 
 
 # ---------------------------------------------------------------------------
@@ -1173,12 +976,7 @@ def ann_ivf_from_index(
     scored = q_cells.join(corpus, "cell").withColumn(
         "cos_sim", cosine_vectorized(F.col("q_vec"), F.col("c_vec"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", F.round("cos_sim", 6).alias("cos_sim"), "rank")
-    )
+    return _top_k_per_query(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1504,6 +1302,29 @@ def _sub_centroid(
     return df.withColumn(vec_col, _resid(F.col(vec_col), F.col("cell")))
 
 
+def _read_ivfpq_index(spark, index_dir: str, dim: int):
+    """Read a persisted IVF-PQ index's side tables: ``(cents, books,
+    cent_map)`` — the centroid frame, the ``m`` codebooks as (ks, dim/m)
+    arrays, and cell → centroid vector (k·dim + m·ks·dim/m doubles, the
+    only driver traffic of the PQ family)."""
+    import numpy as np
+
+    cents = spark.read.parquet(index_dir + ".centroids")
+    book_rows = collect_index_rows(
+        spark.read.parquet(index_dir + ".codebooks"), what="ivfpq codebooks"
+    )
+    m = 1 + max(r["sub_m"] for r in book_rows)
+    ks = 1 + max(r["code"] for r in book_rows)
+    books = [np.zeros((ks, dim // m)) for _ in range(m)]
+    for r in book_rows:
+        books[r["sub_m"]][r["code"]] = r["codeword"]
+    cent_map = {
+        r["cell"]: np.asarray(list(r["centroid"]), dtype=np.float64)
+        for r in collect_index_rows(cents, what="ivfpq centroids")
+    }
+    return cents, books, cent_map
+
+
 def ann_ivfpq_from_index(
     spark,
     index_dir: str,
@@ -1528,20 +1349,7 @@ def ann_ivfpq_from_index(
     true vectors per query."""
     import numpy as np
 
-    cents = spark.read.parquet(index_dir + ".centroids")
-    book_rows = collect_index_rows(
-        spark.read.parquet(index_dir + ".codebooks"), what="ivfpq codebooks"
-    )
-    m = 1 + max(r["sub_m"] for r in book_rows)
-    ks = 1 + max(r["code"] for r in book_rows)
-    books = [np.zeros((ks, dim // m)) for _ in range(m)]
-    for r in book_rows:
-        books[r["sub_m"]][r["code"]] = r["codeword"]
-    cmap = {
-        r["cell"]: np.asarray(list(r["centroid"]), dtype=np.float64)
-        for r in collect_index_rows(cents, what="ivfpq centroids")
-    }
-
+    cents, books, cmap = _read_ivfpq_index(spark, index_dir, dim)
     q_norm = l2_normalize(queries.select(id_col, vec_col), vec_col=vec_col)
     q_cells = assign_cells(
         q_norm, cents, id_col=id_col, vec_col=vec_col, dim=dim,
@@ -1559,7 +1367,7 @@ def ann_ivfpq_from_index(
     )
     codes = spark.read.parquet(index_dir).filter(F.col("cell").isin(probed))
 
-    sub = dim // m
+    m = len(books)
     bmat = np.stack(books)  # m × ks × sub
 
     @F.pandas_udf(T.DoubleType())
@@ -1579,32 +1387,21 @@ def ann_ivfpq_from_index(
         F.asc("adc_dist"), F.asc(id_col)
     )
     n_cand = k * refine_factor if refine_corpus is not None else k
-    cand = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= n_cand)
-        .select("q_id", "q_vec", id_col, "adc_dist")
+    ranked = scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= n_cand
     )
     if refine_corpus is None:
-        w2 = Window.partitionBy("q_id").orderBy(
-            F.asc("adc_dist"), F.asc(id_col)
+        return ranked.select(
+            "q_id", id_col, F.round("adc_dist", 6).alias("adc_dist"), "rank"
         )
-        return cand.select(
-            "q_id", id_col, F.round("adc_dist", 6).alias("adc_dist")
-        ).withColumn("rank", F.row_number().over(w2))
+    cand = ranked.select("q_id", "q_vec", id_col, "adc_dist")
     true_vecs = refine_corpus.select(
         F.col(id_col), F.col(vec_col).alias("c_vec")
     )
     refined = cand.join(true_vecs, id_col).withColumn(
         "cos_sim", cosine_vectorized(F.col("q_vec"), F.col("c_vec"))
     )
-    w3 = Window.partitionBy("q_id").orderBy(
-        F.desc("cos_sim"), F.asc(id_col)
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w3))
-        .filter(F.col("rank") <= k)
-        .select("q_id", id_col, F.round("cos_sim", 6).alias("cos_sim"), "rank")
-    )
+    return _top_k_per_query(refined, k, id_col=id_col)
 
 
 def ivfpq_index_append(
@@ -1626,23 +1423,7 @@ def ivfpq_index_append(
     (distribution shift) is a rebuild decision, as in any IVF system —
     monitor via :func:`pq_distortion` on a sample. Returns rows appended.
     """
-    import numpy as np
-
-    cents = spark.read.parquet(index_dir + ".centroids")
-    book_rows = collect_index_rows(
-        spark.read.parquet(index_dir + ".codebooks"),
-        what="ivfpq_index_append codebooks",
-    )
-    m = 1 + max(r["sub_m"] for r in book_rows)
-    ks = 1 + max(r["code"] for r in book_rows)
-    books = [np.zeros((ks, dim // m)) for _ in range(m)]
-    for r in book_rows:
-        books[r["sub_m"]][r["code"]] = r["codeword"]
-    cmap = {
-        r["cell"]: list(r["centroid"])
-        for r in collect_index_rows(cents, what="ivfpq_index_append centroids")
-    }
-
+    cents, books, cmap = _read_ivfpq_index(spark, index_dir, dim)
     new_n = l2_normalize(
         new_vectors.select(id_col, vec_col), vec_col=vec_col
     )

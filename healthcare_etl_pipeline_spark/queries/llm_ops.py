@@ -481,7 +481,7 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = td(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     corpus = emb.filter(F.col("vec_id") >= 10)
-    return S.brute_force_topk(queries, corpus, k=5, dim=64, exact_fold=True)
+    return S.brute_force_topk(queries, corpus, k=5, dim=64)
 
 
 def _ann_recall_contract(
@@ -514,9 +514,9 @@ def _ann_recall_contract(
         emb = prepare(emb)
     queries = emb.filter(F.col("vec_id") < 10)
     corpus = emb.filter(F.col("vec_id") >= 10)
-    exact = S.brute_force_topk(
-        queries, corpus, k=5, dim=64, exact_fold=True
-    ).transform(bounded_persist)  # feeds the per-q arrays AND the hit count
+    exact = S.brute_force_topk(queries, corpus, k=5, dim=64).transform(
+        bounded_persist
+    )  # feeds the per-q arrays AND the hit count
     approx = approx_topk(queries, corpus)
     hits = exact.select("q_id", "vec_id").join(
         approx.select("q_id", "vec_id"), ["q_id", "vec_id"], "left_semi"
@@ -564,7 +564,7 @@ def ann_lsh_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ann_recall_contract(
         spark,
         sf_dir,
-        lambda q, c: S.ann_lsh_topk_vectorized(
+        lambda q, c: S.ann_lsh_topk(
             q, c, k=5, dim=64, planes=4, tables=6, sig_col="sigs"
         ),
         floor=0.5,
@@ -698,7 +698,7 @@ def ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(bounded_persist)  # one signature stage feeds BOTH join sides
     queries = emb.filter(F.col("vec_id") < 10)
     corpus = emb.filter(F.col("vec_id") >= 10)
-    return S.ann_lsh_topk_vectorized(
+    return S.ann_lsh_topk(
         queries,
         corpus,
         k=5,
@@ -3161,7 +3161,7 @@ def ann_ivfpq_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, index_dir, corpus, probes, floor=0.35, refine_factor=4
     )
     assert rep["retrained"], rep  # the drift trigger must fire
-    exact = S.brute_force_topk(probes, corpus, k=5, dim=64, exact_fold=True)
+    exact = S.brute_force_topk(probes, corpus, k=5, dim=64)
     return exact.groupBy("q_id").agg(
         F.sort_array(F.collect_list("vec_id")).alias("exact_top5"),
         F.lit(bool(rep["retrained"])).alias("retrain_triggered"),

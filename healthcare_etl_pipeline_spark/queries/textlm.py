@@ -333,7 +333,7 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") == 0)
     corpus = emb.filter(F.col("vec_id") != 0)
     dense = (
-        S.brute_force_topk(queries, corpus, k=20, dim=64, exact_fold=True)
+        S.brute_force_topk(queries, corpus, k=20, dim=64)
         .select(F.col("vec_id").alias("doc_id"), F.col("rank").alias("dense_rank"))
     )
     fused = (

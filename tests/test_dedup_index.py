@@ -38,7 +38,9 @@ def txn_wh(spark, tmp_path):
 def _setup_index(spark, wh, corpus_rows):
     corpus = _docs(spark, corpus_rows)
     DI.register_minhash_index(wh, "mh_idx", corpus, "doc_id")
-    DI.build_minhash_index(wh, corpus, index_table="mh_idx", batch_id="boot")
+    boot = wh.begin("boot")
+    DI.build_minhash_index(wh, corpus, index_table="mh_idx", txn=boot)
+    boot.commit()
     return corpus
 
 

@@ -72,7 +72,7 @@ EXPECTED_PYTHON = {
     "enc_roundtrip_customers",
     "multimodal_feature_extract",
     "stream_stateful_user_totals",
-    "ann_lsh_cosine",   # numpy matmul signatures (portable; exact-fold re-rank)
+    "ann_lsh_cosine",   # numpy matmul signatures (portable; integer-quantized re-rank)
     "ann_lsh_recall_contract",  # numpy signatures + einsum cosine (vectorized)
     "ann_ivf_cosine",   # einsum cosine for cell assignment + re-rank
     "dedup_embedding_lsh",  # numpy matmul LSH signatures (exact-fold re-rank)

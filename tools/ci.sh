@@ -3,7 +3,7 @@
 #
 #   bash tools/ci.sh --quick    # per-COMMIT gate (<5 min): registry
 #                               # contract tests + fast unit suites +
-#                               # a 12-query oracle smoke at sf0.001
+#                               # a 14-query oracle smoke at sf0.001
 #   bash tools/ci.sh            # full drive: sf0.01 registry drive +
 #                               # plan audit + whole pytest suite
 #   bash tools/ci.sh --full     # adds the sf0.1 + sf0.001 registry drives
@@ -36,8 +36,9 @@ if [[ "${1:-}" == "--quick" ]]; then
   # rows, the LocalRelation plan shape of frames built from Python rows,
   # the one-transaction ingest (CLI ingest visible to the server, a CLI
   # crash mid-load leaves no row, a streaming micro-batch crash replays
-  # whole), and a 12-query oracle smoke spanning each operator family at
-  # sf0.001.
+  # whole), the similarity kernels (brute-force and LSH top-k, banded
+  # embedding dedup), and a 14-query oracle smoke spanning each operator
+  # family at sf0.001.
   echo "== quick 1/3 registry + fast unit suites"
   python -m pytest -q -x \
     tests/test_queries_registry.py tests/test_dag.py \
@@ -49,10 +50,13 @@ if [[ "${1:-}" == "--quick" ]]; then
   echo "== quick 2/3 one-transaction ingest: CLI visibility + crash, stream crash replay"
   python -m pytest -q -x tests/test_cli.py tests/test_streaming.py \
     -k "ingest_visible or ingest_crash or crash_replay"
+  echo "== quick 2/3 similarity: brute-force + LSH top-k, banded embedding dedup"
+  python -m pytest -q -x tests/test_similarity.py -k "lsh or brute_force"
   echo "== quick 3/3 oracle smoke @ ${SF0001}"
   python tools/check_oracle.py "${SF0001}" \
     q1_pricing_summary q5_revenue_by_nation dedup_exact_lineitem \
-    minhash_lsh_pairs cosine_topk_bruteforce text_stats_docs \
+    minhash_lsh_pairs cosine_topk_bruteforce ann_lsh_cosine \
+    dedup_embedding_lsh text_stats_docs \
     token_count_bpe consent_gate_events patients_ingest_valid \
     txn_committed_read stream_tumbling_counts keyset_page_customers
   echo "quick gate green"
